@@ -83,11 +83,11 @@ def _pad(df: DataFrame, table: str) -> DataFrame:
 
 
 def _write_tee(store: FrontierStore, tee: DataFrame) -> str:
-    """The round's ONE Spark action: rebalance + partitionBy(_table)
+    """The round's ONE table write: rebalance + partitionBy(_table)
     parquet write; per-table counts are collected by the Observation the
     caller attached — no separate count jobs, no collect()s.
 
-    REBALANCE hint (r6; was a bare repartition): AQE right-sizes the
+    REBALANCE hint (not a bare repartition): AQE right-sizes the
     write toward the 64m advisory AND splits skewed partitions
     (OptimizeSkewInRebalancePartitions) — a 10^8-row round whose results
     partition dwarfs the frontier marks no longer bottlenecks one write
@@ -109,7 +109,8 @@ def _write_tee(store: FrontierStore, tee: DataFrame) -> str:
         # bloom filter on the fingerprint column (SURVEY D1): the
         # Parquet-native stand-in for the reference's Redis SET membership
         # probe — point lookups / IN-filters on fp skip row groups whose
-        # bloom says "absent" (measured in BENCH/BASELINE.md)
+        # bloom says "absent" (measured over 8M fps in 16 files: absent-fp
+        # lookups 2.53x faster, present-fp 1.94x, for +4% file size)
         .option("parquet.bloom.filter.enabled#fp", "true")
         .mode("overwrite")
         .parquet(shared)
@@ -120,9 +121,10 @@ def _write_tee(store: FrontierStore, tee: DataFrame) -> str:
 
 def seed_frontier(spark: SparkSession, store: FrontierStore, seeds: DataFrame, cfg: CrawlConfig) -> int:
     """Round-0 seed injection (Q3/Q10): canonicalize, fingerprint, bucket,
-    insert into frontier + seen — one tee write, one Spark job. Idempotent
-    re-init = a new snapshot chain (mirror of the reference deleting old
-    Redis keys, /root/reference/scripts/run_crawler.py:165-280)."""
+    insert into frontier + seen — one tee write (4 Spark jobs on the
+    traced ``crawl_polite`` benchmark, seed 7). Idempotent re-init = a new
+    snapshot chain (mirror of the reference deleting old Redis keys in
+    its scripts/run_crawler.py)."""
     from pyspark.sql import Observation
 
     canon = seeds.withColumn("url", canonicalize_urls(F.col("url")))
@@ -232,7 +234,7 @@ def ingest_urls(
     vals = obs.get
     n = int(vals["frontier"] or 0)
     meta = {"phase": "ingest"}
-    # Commit-time re-reads (ADVICE r3 / concurrent stream_url_ingest mode):
+    # Commit-time re-reads (concurrent stream_url_ingest mode):
     # a run_round commit may have landed while our tee write ran. (a) Never
     # commit BEHIND the frontier's current round — that would make
     # resume_round() re-run an already-committed round with corrupted
@@ -409,33 +411,25 @@ def run_round(
 ) -> dict:
     """Execute one round; returns metric counts.
 
-    THE SCALING CONTRACT (round 2): the whole round is **one Spark job** —
-    a single tee write carrying frontier marks + new frontier rows + seen
-    inserts + results + fetch_log, partitioned by ``_table``, with every
-    count the round needs collected by an attached Observation during that
-    same write. Round 1 ran ~9 driver-serial actions per round (2 counts,
-    1 collect, 4 table writes, 1 metrics write, + manifest commits); the
-    driver-side serial floor was the measured anti-scaling term. Metrics
-    rows are a few KB — written driver-side via pyarrow, zero jobs.
+    All of the round's table writes are ONE tee write carrying frontier
+    marks + new frontier rows + seen inserts + results + fetch_log,
+    partitioned by ``_table``, with every count the round commits
+    collected by an attached Observation during that same write; writing
+    each table separately would add a driver-serial action per table.
+    Metrics rows are a few KB — written driver-side via pyarrow, zero
+    jobs. Before the tee write, three actions materialize the cached pop
+    slice + robots denials (one count), the fetched+extracted set and the
+    discovered rows; AQE stages and broadcast sub-jobs fan each action
+    out into several Spark jobs. Measured on the traced ``crawl_polite``
+    benchmark (480 URLs, seed 7): 34 Spark jobs per round — 27 up to the
+    commit, 7 in ``commit_round``, 6 of those for the compaction that
+    fires there.
 
     Commit order matters: seen/results/fetch_log/metrics manifests first,
     frontier LAST — the frontier snapshot is the round's atomic commit
     point (resume rolls siblings back to it, SnapshotStore.rollback_to_round).
     """
-    import os as _os
-    import time as _time
-
     from pyspark.sql import Observation
-
-    _timing = _os.environ.get("CRAWLSPARK_TIMING") == "1"
-    _t0 = _time.perf_counter()
-
-    def _mark(label):
-        nonlocal _t0
-        if _timing:
-            now = _time.perf_counter()
-            print(f"  [round {round_no}] {label}: {now - _t0:.2f}s", flush=True)
-            _t0 = now
 
     state = store.frontier_state()
     if state is None:
@@ -453,7 +447,7 @@ def run_round(
     # measured 3-5x slower than materializing in dependency order.
     sliced = sliced.cache()
     denied = denied.cache()
-    # job 1 of 3: early-exit counts (one job for both branches)
+    # action 1 of 4: early-exit counts (one action for both branches)
     pd_counts = dict(
         sliced.select(F.lit("p").alias("_t"))
         .unionByName(denied.select(F.lit("d").alias("_t")))
@@ -461,7 +455,6 @@ def run_round(
     )
     n_popped_pre = int(pd_counts.get("p", 0))
     n_denied_pre = int(pd_counts.get("d", 0))
-    _mark("job1 pop/denied counts")
     if n_popped_pre == 0 and n_denied_pre == 0:
         state.unpersist()
         sliced.unpersist()
@@ -469,7 +462,7 @@ def run_round(
         return {"popped": 0}
 
     # F1 fetch, behind the FetchBackend seam (N7). Broadcast gating: the
-    # popped count is already known (job 1), so the slice joins broadcast
+    # popped count is already known (action 1), so the slice joins broadcast
     # only when the round is provably small (cfg.broadcast_slice_max_rows);
     # a 10^7-row round at the 10^10-URL design point instead takes plain
     # equi-joins on url (sort-merge / AQE — pages bucketed by url make it
@@ -531,12 +524,12 @@ def run_round(
     ext = ext.join(_bcast(slice_ctx), "url", "inner")
     corpus_dir = None
     if emit_text:
-        # job 2 of 3, emit_text shape: the materializing action IS the
-        # corpus write. The earlier shape cached ext WITH text (at
-        # ~50 KB/page the block manager materializes the round's whole
-        # text mass in executor heaps — GC/spill pressure, measured as
-        # the largest steady-round term) and then SERIALIZED the same
-        # text a second time through the tee. Instead the round's
+        # action 2 of 4, emit_text shape: the materializing action IS the
+        # corpus write. Caching ext WITH text (at ~50 KB/page the block
+        # manager materializes the round's whole text mass in executor
+        # heaps — GC/spill pressure, measured as the largest steady-round
+        # term) would then SERIALIZE the same text a second time through
+        # the tee. Instead the round's
         # fetch-join + extract pipeline streams straight into snappy
         # parquet ONCE — a wide file (text + extraction fields + slice
         # ctx) committed to the `corpus` table, whose declared columns
@@ -559,13 +552,12 @@ def run_round(
         n_fetched = ext.count()
     else:
         ext = ext.cache()
-        # job 2 of 3: materialize the extract kernel ONCE (pages are
+        # action 2 of 4: materialize the extract kernel ONCE (pages are
         # unique by url, so ext rows == fetched URLs — this count IS
         # n_fetched) so the tee job's many branches read a warm cache
         # instead of racing the whole fetch+parse pipeline behind their
         # broadcast sub-jobs
         n_fetched = ext.count()
-    _mark("job2 ext materialize")
 
     # F5/F6 validate + cast; S1 upsert-by-rank
     records = (
@@ -599,7 +591,7 @@ def run_round(
         .withColumn("priority", link_priority_col(F.col("url"), cfg.priority_t1, cfg.priority_t2))
         .withColumn(
             "seq",
-            # bounds enforced loudly (judge r1): a page with >= 2^12 links
+            # bounds enforced loudly: a page with >= 2^12 links
             # or a parent_rn >= 2^20 would silently spill into the next
             # field and corrupt the FIFO contract — raise instead.
             # (parent_rn < 2^20 is also guaranteed statically by
@@ -634,9 +626,9 @@ def run_round(
     new_rows = links.select(*_FRONTIER_COLS)
     if seen is not None:
         new_rows = new_rows.join(seen.select("fp"), "fp", "left_anti")
+    # action 3 of 4: the discovered rows, warm for the tee's branches
     new_rows = new_rows.cache()
     n_new = new_rows.count()
-    _mark("job2b new_rows materialize")
 
     # status marks (op_seq = round*4+2 always beats the insert op_seq of any
     # earlier round, see store.py docstring)
@@ -688,15 +680,16 @@ def run_round(
         .unionByName(_pad(records, "results"))
         .unionByName(_pad(fetch_rows, "fetch_log"))
     )
-    # (emit_text: the corpus files were already written by job 2 — the tee
+    # (emit_text: the corpus files were already written by action 2 — the tee
     # never carries the text a second time; commit_round references the
     # staging dir directly)
     def _n(cond):
         return F.sum(F.when(cond, 1).otherwise(0))
 
-    # job 3 of 3: the tee write. Only seen/results counts are unknown at
-    # this point (popped/denied from job 1, fetched from job 2) — the
-    # attached Observation collects them during the write itself.
+    # action 4 of 4: the tee write. Only seen/results counts are unknown
+    # at this point (popped/denied from action 1, fetched from action 2,
+    # new from action 3) — the attached Observation collects them during
+    # the write itself.
     obs = Observation()
     tee = tee.observe(
         obs,
@@ -709,7 +702,6 @@ def run_round(
         ).alias("exhausted"),
     )
     shared, has_data = _write_tee(store, tee)
-    _mark("job3 tee write")
 
     state.unpersist()
     sliced.unpersist()
@@ -741,7 +733,7 @@ def run_round(
     }
     meta = {"counts": counts}
     if queued_before is not None:
-        # Concurrent-ingest fold (ADVICE r3): ingest_urls may commit while
+        # Concurrent-ingest fold: ingest_urls may commit while
         # this round is mid-flight (the advertised continuous
         # stream_url_ingest mode). Its commit bumps the manifest's
         # queued_after hint — but the caller's queued_before was read
@@ -767,7 +759,7 @@ def run_round(
         {"frontier": n_popped_pre + n_denied_pre + n_new, "seen": n_new,
          "results": n_items, "fetch_log": n_fetched,
          # one corpus row per fetched url (ext is url-unique) — the count
-         # is already known from job 2, no extra Observation needed
+         # is already known from action 2, no extra Observation needed
          "corpus": n_fetched if emit_text else 0},
         round_no,
         corpus_dir=corpus_dir,

@@ -63,7 +63,7 @@ def _shingle_hash_col(shingle) -> "F.Column":
 def exact_dedup(documents: DataFrame) -> DataFrame:
     """Exact content dedup: canonical representative = min doc_id per
     md5-fingerprint. One hash-aggregate shuffle; no sort."""
-    # NOT spread (r6): md5+normalize is cheap per byte — round-robin
+    # NOT spread: md5+normalize is cheap per byte — round-robin
     # repartition of the text column costs more than it parallelizes at
     # every measured SF (sf0.1: 0.28 s plain vs 0.72 s spread; sf1.0:
     # 0.65 vs 0.81). spread_input stays for genuinely CPU-heavy
@@ -90,13 +90,13 @@ def shingle_index(documents: DataFrame, k: int = 3, max_df: int | None = None) -
         F.explode(F.array_distinct(shingles_col(F.col("text"), k))).alias("shingle"),
     )
     if max_df is not None:
-        # r6: stop-shingle cap as a COUNT WINDOW on shingle instead of
-        # the df-aggregate + anti-join-back — the old shape referenced
-        # the exploded index on BOTH sides (agg input + join probe), so
-        # the shingle explode executed twice. One shuffle of the index,
-        # single consumer, the same shape ngram_jaccard_pairs adopted.
-        # (No broadcast hint, same judge-r3 rationale as before: the
-        # stop-shingle population is corpus-derived, not provably small.)
+        # stop-shingle cap as a COUNT WINDOW on shingle, not a
+        # df-aggregate + anti-join-back: that shape references the
+        # exploded index on BOTH sides (agg input + join probe), so the
+        # shingle explode executes twice. One shuffle of the index,
+        # single consumer, the same shape as ngram_jaccard_pairs. (No
+        # broadcast hint: the stop-shingle population is corpus-derived,
+        # not provably small.)
         idx = (
             idx.withColumn(
                 "_df", F.count("*").over(Window.partitionBy("shingle"))
@@ -127,26 +127,25 @@ def ngram_jaccard_pairs(
 
     Emits (doc_a < doc_b, n_inter, jaccard >= threshold).
     """
-    # Carried-size design (judge r3: the posting subtree fed both `sizes`
-    # and `inter` and was recomputed per consumer — 11 static exchanges):
-    # each doc's surviving-shingle count n_sh is attached to the index rows
+    # Carried-size design (a separate `sizes` table would make the posting
+    # subtree feed both `sizes` and `inter` and recompute per consumer —
+    # 11 static exchanges): each doc's surviving-shingle count n_sh is attached to the index rows
     # ONCE (a count window on doc_id), travels inside the posting arrays,
     # and comes out on every emitted pair — so jaccard needs NO post-join
     # against a sizes table.
-    # r6: the stop-shingle cap is a COUNT WINDOW on shingle instead of the
-    # r5 df-aggregate + join-back. That r5 shape consumed the exploded
-    # index twice, forcing a MEMORY_AND_DISK persist that was never
-    # unpersisted (ADVICE r5: CacheManager holds the blocks for the
-    # session lifetime) and at 100 TB would cache the full exploded index.
-    # The window keeps the tree LINEAR — one pass over the index, one
+    # The stop-shingle cap is a COUNT WINDOW on shingle, not a
+    # df-aggregate + join-back. That shape consumes the exploded index
+    # twice, forcing a MEMORY_AND_DISK persist whose blocks the
+    # CacheManager holds for the session lifetime, and at 100 TB it would
+    # cache the full exploded index. The window keeps the tree LINEAR — one pass over the index, one
     # shuffle on shingle, no cache, no join — and is spill-safe (WindowExec
     # buffers one shingle's group via ExternalAppendOnlyUnsafeRowArray,
     # which spills; a boilerplate shingle's rows are dropped immediately
     # after). df=1 shingles (at corpus scale the MAJORITY of the index)
     # are dropped before the posting build — they emit no pairs, but only
     # after n_sh counts them (n_sh = ALL kept shingles of the doc).
-    # Measured sf1.0 hot: result-identical to the r5 shape, same best time
-    # (~11 s vs ~10-12 s) without the r5 shape's cache-churn variance
+    # Measured sf1.0 hot: result-identical to the join-back shape, same
+    # best time (~11 s vs ~10-12 s) without its cache-churn variance
     # (spikes to 50-60 s on repeat invocation from leaked cache entries).
     idx = shingle_index(documents, k, None)
     if max_df is not None:
@@ -159,11 +158,11 @@ def ngram_jaccard_pairs(
         posting = sized.groupBy("shingle").agg(
             F.sort_array(F.collect_list(F.struct("doc_id", "n_sh"))).alias("docs")
         )
-        # Pair emission, r6 shape. Measured at sf1.0 (50k docs): the pair
+        # Pair emission. Measured at sf1.0 (50k docs): the pair
         # population is ~71M of which ~67M are DISTINCT (docs share 1-2
         # shingles with almost every co-bucketed doc), so map-side partial
-        # aggregation collapses nothing and the old plan's exchange carried
-        # ~67M 40-byte pair rows. Instead, pairs stay PACKED IN ARRAYS
+        # aggregation collapses nothing and an exchange of pair rows
+        # carries ~67M 40-byte rows. Instead, pairs stay PACKED IN ARRAYS
         # through the one exchange (guide §2.3 "shuffle keys and metadata
         # instead of payloads", §8): each posting element i becomes one row
         # (doc_a, n_a, rest = the sorted tail of the posting), hashed by
@@ -172,10 +171,10 @@ def ngram_jaccard_pairs(
         # Every occurrence of a pair (a, b) lands in a's partition, so the
         # post-exchange explode + count aggregate is LOCAL: hashpartitioning
         # (doc_a) satisfies the groupBy's clustering and no second exchange
-        # exists. Nested-loop HOFs (transform+slice per element, interpreted)
-        # are gone — posexplode/slice/explode all codegen. Best-of-N at
-        # sf1.0 hot: 11.3 s (r5 shape, after the AQE fix) -> 6.6 s; single
-        # pair exchange ~1.1 GB of array payload vs ~2.7 GB of pair rows.
+        # exists. No nested-loop HOFs (transform+slice per element,
+        # interpreted) — posexplode/slice/explode all codegen. Best-of-N
+        # at sf1.0 hot: 11.3 s (pair-row shape) -> 6.6 s; single pair
+        # exchange ~1.1 GB of array payload vs ~2.7 GB of pair rows.
         e1 = posting.select(F.posexplode("docs").alias("pos", "x"), F.col("docs"))
         head = e1.select(
             F.col("x.doc_id").alias("doc_a"),
@@ -226,17 +225,18 @@ def minhash_signatures(documents: DataFrame, n_hashes: int = 32, k: int = 3) -> 
     """MinHash signature per doc: for each hash i, min over shingles of
     (a_i * x + b_i) mod p.
 
-    r6: computed entirely IN-ROW — the signature is a per-document map, so
-    the r5 explode + groupBy(doc_id) (2.6M exploded rows + a shuffle at
-    sf1.0) was pure overhead: each doc's min folds over its own shingle
+    Computed entirely IN-ROW — the signature is a per-document map, so
+    an explode + groupBy(doc_id) (2.6M exploded rows + a shuffle at
+    sf1.0) is pure overhead: each doc's min folds over its own shingle
     array (one hash pass via transform, then one aggregate per hash
     component — longs only, the md5 runs once per shingle). ZERO shuffles
-    at any scale. Requires doc_id unique (the documented PK contract; the
-    old shape merged duplicate doc_ids, this one emits a row per input
-    row). Measured sf1.0 hot best-of-N: 2.02 s -> 0.38 s, rows identical.
+    at any scale. Requires doc_id unique (the documented PK contract;
+    this emits a row per input row, it does not merge duplicate doc_ids).
+    Measured sf1.0 hot best-of-N: 2.02 s (explode shape) -> 0.38 s, rows
+    identical.
     """
     params = minhash_params(n_hashes)
-    # NOT spread here (r6 A/B): the bare-signature consumer (t05) loses
+    # NOT spread here (measured A/B): the bare-signature consumer (t05) loses
     # ~0.15 s to the repartition analysis/exchange; LSH callers that
     # MATERIALIZE the signatures spread their input themselves before
     # calling (minhash_lsh_pairs, lsh_estimate_audit,
@@ -278,7 +278,7 @@ def minhash_lsh_pairs(
     hash) — no quadratic blowup; only candidates pay the verify cost.
     """
     rows_per_band = n_hashes // bands
-    # r6: spread the scan before the in-row signature fold (the md5-per-
+    # spread the scan before the in-row signature fold (the md5-per-
     # shingle CPU term; no-op at corpus scale), then...
     sig = minhash_signatures(spread_input(documents), n_hashes, k)
     # ...materialize the signature table before the banded self-join —
@@ -333,10 +333,10 @@ def verify_jaccard_pairs(
     Plan: semi-join the shingle inverted index down to docs that appear in
     some candidate pair, then intersection = cand ⋈ idx(doc_a) ⋈ idx(doc_b,
     shingle) — every join an equi-join whose left side is bounded by
-    |cand| x shingles-per-doc. No full index self-join anywhere (round-1
-    verify recomputed all-pairs Jaccard corpus-wide, defeating LSH).
+    |cand| x shingles-per-doc. No full index self-join anywhere (that
+    would recompute all-pairs Jaccard corpus-wide, defeating LSH).
     """
-    # r6: materialize the candidate set once — it appears THREE times in
+    # materialize the candidate set once — it appears THREE times in
     # this plan (both arms of cand_docs plus the intersection join), and
     # for LSH callers it is the banded self-join, the expensive half of
     # the operator. Same checkpoint discipline as dup_clusters: lineage
@@ -361,8 +361,8 @@ def verify_jaccard_pairs(
     # carried sizes (same trick as ngram_jaccard_pairs): n_sh rides the
     # index rows through the intersection joins, so no sizes table and no
     # post-joins. The semi-joined sized index feeds BOTH join sides, so it
-    # too is materialized once (r6; it was recomputed per side, doubling
-    # the shingle pipeline).
+    # too is materialized once (otherwise it is recomputed per side,
+    # doubling the shingle pipeline).
     sized = _ckpt(
         idx_c.withColumn("n_sh", F.count("*").over(Window.partitionBy("doc_id")))
     )
@@ -423,10 +423,10 @@ def dup_clusters(pairs: DataFrame, max_iters: int = 25) -> DataFrame:
     def _ckpt(df: DataFrame) -> DataFrame:
         return df.checkpoint(eager=True) if reliable else df.localCheckpoint(eager=True)
 
-    # r6: materialize the EDGE table once. edges is a lazy plan over the
+    # materialize the EDGE table once. edges is a lazy plan over the
     # pair generator (for t13-class callers the full shingle->posting->
     # pair pipeline); without this every iteration's join and the final
-    # convergence probe re-executed that whole subtree — measured at
+    # convergence probe re-execute that whole subtree — measured at
     # sf0.1 the t13 gate spent ~4x the pair-pipeline cost in the loop.
     # After the checkpoint each iteration touches only the bounded
     # (2|pairs|)-row edge relation; blocks are released on return (the
@@ -439,25 +439,34 @@ def dup_clusters(pairs: DataFrame, max_iters: int = 25) -> DataFrame:
             .distinct()
             .withColumn("cluster_id", F.col("doc_id"))
         )
-        # r6: convergence probe via the LABEL-SUM invariant instead of a
-        # per-iteration join, for NUMERIC node ids. Each new label is
+        # convergence probe via the LABEL-SUM invariant instead of a
+        # per-iteration join, for INTEGRAL node ids. Each new label is
         # min(own, neighbors') with own always a candidate, so labels are
         # monotone non-increasing per node — the iteration is converged
-        # iff sum(cluster_id) is unchanged. decimal(38,0) so the sum
-        # cannot overflow long at 10^9+ docs under ANSI mode. In
+        # iff sum(cluster_id) is unchanged. The sum is exact only when the
+        # ids are integers: a fractional id cast to decimal(38,0) rounds
+        # (1.2 and 1.1 both become 1), so fractional ids keep the join
+        # probe. decimal(38,0) so the sum cannot overflow long at 10^9+
+        # docs under ANSI mode; try_sum turns a decimal overflow (huge
+        # decimal ids) into a null, and a null sum never counts as
+        # converged — that iteration falls back to the join probe. In
         # localCheckpoint mode the sum rides the checkpoint job itself as
-        # an Observation metric (zero extra jobs per iteration; verified:
+        # an Observation metric (zero extra jobs per iteration;
         # CollectMetrics fires on Dataset.localCheckpoint's action); a
         # reliable checkpoint materializes through the RDD API where
         # observe metrics are not guaranteed, so that mode reads the sum
         # from the materialized blocks with a scalar agg instead.
         # Non-numeric ids (t85's host strings) have no sound scalar
-        # invariant — they keep the join probe (host-bounded tables).
+        # invariant either — they always take the join probe
+        # (host-bounded tables).
         from pyspark.sql import Observation
-        from pyspark.sql.types import NumericType
+        from pyspark.sql.types import DecimalType, IntegralType
 
-        numeric = isinstance(init.schema["cluster_id"].dataType, NumericType)
-        _sum_col = F.sum(F.col("cluster_id").cast("decimal(38,0)")).alias("s")
+        id_type = init.schema["cluster_id"].dataType
+        integral = isinstance(id_type, IntegralType) or (
+            isinstance(id_type, DecimalType) and id_type.scale == 0
+        )
+        _sum_col = F.try_sum(F.col("cluster_id").cast("decimal(38,0)")).alias("s")
 
         def _ckpt_with_sum(df: DataFrame):
             if reliable:
@@ -467,7 +476,16 @@ def dup_clusters(pairs: DataFrame, max_iters: int = 25) -> DataFrame:
             ck = df.observe(obs, _sum_col).localCheckpoint(eager=True)
             return ck, obs.get["s"]
 
-        if numeric:
+        def _unchanged(new: DataFrame, old: DataFrame) -> bool:
+            return (
+                new.alias("n")
+                .join(old.alias("o"), "doc_id")
+                .filter(F.col("n.cluster_id") != F.col("o.cluster_id"))
+                .limit(1)
+                .count()
+            ) == 0
+
+        if integral:
             labels, prev_sum = _ckpt_with_sum(init)
         else:
             labels, prev_sum = _ckpt(init), None
@@ -482,19 +500,16 @@ def dup_clusters(pairs: DataFrame, max_iters: int = 25) -> DataFrame:
                 .groupBy("doc_id")
                 .agg(F.min("cluster_id").alias("cluster_id"))
             )
-            if numeric:
+            if integral:
                 new_labels, new_sum = _ckpt_with_sum(merged)
-                converged = new_sum == prev_sum
+                if new_sum is None or prev_sum is None:
+                    converged = _unchanged(new_labels, labels)
+                else:
+                    converged = new_sum == prev_sum
                 prev_sum = new_sum
             else:
                 new_labels = _ckpt(merged)
-                converged = (
-                    new_labels.alias("n")
-                    .join(labels.alias("o"), "doc_id")
-                    .filter(F.col("n.cluster_id") != F.col("o.cluster_id"))
-                    .limit(1)
-                    .count()
-                ) == 0
+                converged = _unchanged(new_labels, labels)
             labels.unpersist()  # previous iteration's blocks are dead now
             labels = new_labels
             if converged:
@@ -512,13 +527,13 @@ def simhash_col(text, k: int = 3, bits: int = 16):
     (+1/-1) votes from each shingle's md5-derived hash. Pure column
     algebra (aggregate over the shingle array), no UDF, no shuffle.
 
-    r6: ONE aggregate pass with a packed accumulator instead of the r5
-    per-bit aggregates — those referenced the hash array expression once
-    PER BIT, and higher-order functions run interpreted (no codegen, no
-    common-subexpression elimination), so every row tokenized, shingled
-    and md5-hashed its text ``bits`` times over. Now: per-bit one counts
-    (ones_i) accumulate in 32-bit lanes packed two-per-long (bit i in the
-    low lane of struct field i%8, bit i+8 in the high lane), and
+    ONE aggregate pass with a packed accumulator instead of per-bit
+    aggregates — those reference the hash array expression once PER BIT,
+    and higher-order functions run interpreted (no codegen, no
+    common-subexpression elimination), so every row would tokenize,
+    shingle and md5-hash its text ``bits`` times over. Here: per-bit one
+    counts (ones_i) accumulate in 32-bit lanes packed two-per-long (bit i
+    in the low lane of struct field i%8, bit i+8 in the high lane), and
     sign(votes_i) > 0 == 2*ones_i > n. The shingle count n comes from
     token arithmetic (no second array build). Identical output by
     construction; measured ~9x on the t06 pipeline. ``bits`` <= 16.
@@ -594,7 +609,7 @@ def simhash64_col(text, k: int = 3):
     from pyspark.sql import types as T
     from pyspark.sql.functions import pandas_udf
 
-    # Memory bound per vectorized fold (ADVICE r3): the bit matrix costs
+    # Memory bound per vectorized fold: the bit matrix costs
     # ~128 B/gram at peak (unpackbits + the contiguous transposed copy).
     # A 10k-row Arrow batch of web documents (~1k grams/doc) folded whole
     # would put multi-GB of transient numpy buffers in one Python worker —
@@ -606,9 +621,9 @@ def simhash64_col(text, k: int = 3):
 
     @pandas_udf(T.LongType())
     def _simhash64(texts: pd.Series) -> pd.Series:
-        # Whole-batch numpy vote fold (judge r2: the per-row 64-bit python
-        # loop was ~64x slower than needed — this kernel IS the t12
-        # pipeline's wall at 100 TB). Python touches each gram only for the
+        # Whole-batch numpy vote fold (a per-row 64-bit python loop is
+        # ~64x slower — this kernel IS the t12 pipeline's wall at
+        # 100 TB). Python touches each gram only for the
         # md5 (C-speed, unavoidable); the 64 per-bit votes happen as ONE
         # unpackbits + reduceat over the concatenated digest buffer per
         # bounded fold chunk. Bit order: int(hexdigest[:16], 16) is the
@@ -692,7 +707,7 @@ def simhash64_pairs_banded(
     withsim = spread_input(documents).select(
         "doc_id", simhash64_col(F.col("text"), k).alias("simhash")
     )
-    # r6: materialize the simhash table before the band self-join — both
+    # materialize the simhash table before the band self-join — both
     # join sides reference the same subtree, so the Arrow kernel (the
     # expensive half of this operator) otherwise runs TWICE. Checkpoint,
     # not cache: lineage is truncated so the blocks are released when the
@@ -829,7 +844,7 @@ def cluster_best_keeper(clusters: DataFrame, quality: DataFrame) -> DataFrame:
     Never a window over raw docs, never corpus x corpus.
     """
     m = clusters.join(quality, "doc_id")
-    # r6: m feeds both the per-cluster keeper aggregate and the final
+    # m feeds both the per-cluster keeper aggregate and the final
     # join back — without materialization the quality side (for t49 a
     # corpus scan + the regex-heavy quality_score) executes twice.
     # Bounded: one row per clustered doc.
@@ -949,7 +964,7 @@ def incremental_minhash_dedup(
     (band, bucket) and the join co-locates — the same layout store.py
     ships for URL fingerprints.
     """
-    # r6: spread the batch scan before the in-row signature fold, and
+    # spread the batch scan before the in-row signature fold, and
     new_sigs = minhash_signatures(spread_input(new_docs), n_hashes, k)
     # the batch bucket table feeds BOTH the join's left side and the
     # history-union right side — materialize the batch signatures once so
@@ -1043,7 +1058,7 @@ def lsh_estimate_audit(
     10^10 docs (feed it stratified_sample output); the operators audited
     run on the full corpus.
     """
-    # r6: spread the scan before the in-row signature fold, and
+    # spread the scan before the in-row signature fold, and
     sigs = minhash_signatures(spread_input(documents), n_hashes, k)
     # materialize signatures before the banded self-join (both sides
     # of the band equi-join reference this subtree — without it the
@@ -1079,7 +1094,7 @@ def lsh_estimate_audit(
     estimated = cand.select(
         "doc_a", "doc_b", F.round(est, 6).alias("est_jaccard")
     )
-    # r6: estimated feeds both the truth verify and the final stitch join;
+    # estimated feeds both the truth verify and the final stitch join;
     # materialize it once (banded self-join + signature algebra upstream)
     spark = documents.sparkSession
     estimated = (

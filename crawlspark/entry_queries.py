@@ -275,8 +275,8 @@ def j01_fetch_join(spark, sf_dir):
 def j02_anti_join(spark, sf_dir):
     """D1 analog: seen-set anti-join — parts never shipped in bulk
     (quantity > 45). The probe side is filtered so the gate is
-    DISCRIMINATING at sf0.01 (judge r3: every part has *some* lineitem, so
-    the unfiltered anti-join verified empty-vs-empty — the weakest
+    DISCRIMINATING at sf0.01 (every part has *some* lineitem, so the
+    unfiltered anti-join would verify empty-vs-empty — the weakest
     possible oracle evidence; with the quantity filter the result is
     non-empty at every driver SF: 7 / 114 / 977 rows at sf0.001/0.01/0.1)."""
     p = _t(spark, sf_dir, "part")
@@ -306,7 +306,7 @@ def c01_priority_pop(spark, sf_dir):
     exact window shape of the frontier pop (priority DESC, seq ASC)."""
     e = _t(spark, sf_dir, "events")
     w = Window.partitionBy("user_id").orderBy(F.desc("value"), F.asc("event_id"))
-    # r6: explicit repartition on the window key — the events table is a
+    # explicit repartition on the window key — the events table is a
     # single-row-group parquet, so the window's partial sort otherwise runs
     # as ONE task before the exchange; pre-partitioning moves the sort
     # behind a 32-way shuffle the window reuses (no second exchange).
@@ -334,7 +334,7 @@ def c03_dedup_latest(spark, sf_dir):
     tiebreak event_id) — the results_state/frontier_state window."""
     e = _t(spark, sf_dir, "events")
     w = Window.partitionBy("user_id").orderBy(F.desc("ts"), F.desc("event_id"))
-    # r6: same single-task-scan fix as c01 — pre-partition on the window
+    # same single-task-scan fix as c01 — pre-partition on the window
     # key so the sort runs behind the shuffle instead of on the lone scan
     # task; the window reuses the exchange.
     return (
@@ -385,8 +385,8 @@ def c05_host_quota(spark, sf_dir):
 def c06_dns_map(spark, sf_dir):
     """N6 DNS prefetch, end-to-end through the REAL engine path: distinct
     hosts -> DISTRIBUTED mapInPandas resolve (one DeterministicResolver +
-    TTL cache per python worker — dns.resolve_hosts, the r5 shape with no
-    driver-side collect) -> size-gated broadcast {host: addr} join
+    TTL cache per python worker — dns.resolve_hosts, with no driver-side
+    collect) -> size-gated broadcast {host: addr} join
     (dns.with_addrs). The oracle recomputes the resolver's md5-derived
     fake IPv4 in pure DuckDB SQL — an independent implementation of the
     same contract, so a hash match verifies the worker-side resolution,
@@ -468,7 +468,7 @@ def t06_simhash_groups(spark, sf_dir):
 def t12_simhash64_banded(spark, sf_dir):
     """64-bit SimHash near-dup pairs, banded hamming<=3 (pigeonhole over 4
     x 16-bit slices; exact bit_count(xor) verify on candidates only).
-    Hash-exact oracle since r3: DuckDB HUGEINT holds the unsigned 64-bit
+    Hash-exact oracle: DuckDB HUGEINT holds the unsigned 64-bit
     md5 prefix (built from two 32-bit hex halves), so the full pipeline —
     votes, signed wrap, banding, xor popcount — replays in pure SQL
     (_simhash64_oracle). The spark-vs-pure-python cross-check also lives
@@ -489,8 +489,8 @@ def t08_ann_lsh_bucketed(spark, sf_dir):
 
 def t09_embedding_near_dup(spark, sf_dir):
     """Sign-LSH-bucketed near-dup pairs. Threshold 0.4, calibrated to the
-    synthetic embeddings (judge r3: 0.8 returned zero pairs at every SF —
-    an empty-vs-empty gate; max bucketed cosine in this corpus is ~0.51,
+    synthetic embeddings (0.8 returns zero pairs at every SF — an
+    empty-vs-empty gate; max bucketed cosine in this corpus is ~0.51,
     so 0.4 yields 13/12/134 pairs at sf0.001/0.01/0.1 and the hash check
     actually verifies cosine arithmetic). Production near-dup uses 0.9+ on
     real embedding models."""
@@ -569,7 +569,7 @@ def t16_paragraph_dedup(spark, sf_dir):
     dedup): explode, hash, one hash-agg shuffle. Gate granularity = token
     (delimiter ' ', min_chars 4): the synthetic documents have no sentence
     or line structure and no cross-doc duplicate sentences at sf0.01
-    (judge r3: the '. '-split gate verified empty-vs-empty), so the gate
+    (a '. '-split gate would verify empty-vs-empty), so the gate
     runs the identical operator at the one granularity where the corpus
     HAS cross-doc duplicates (24 groups at sf0.01 — counts, n_docs and
     keep_doc_id all hash-checked). Real paragraph semantics over multi-
@@ -1261,7 +1261,7 @@ def t51_incremental_minhash(spark, sf_dir):
     d = _t(spark, sf_dir, "documents")
     hist = d.filter(F.col("doc_id") % 2 == 0)
     new = d.filter(F.col("doc_id") % 2 == 1)
-    # r6: the history fold here is derived live from the corpus scan (in
+    # the history fold here is derived live from the corpus scan (in
     # production it is a persisted table) — spread it like the batch side
     from .session import spread_input as _spread
 
@@ -2892,7 +2892,7 @@ def _simhash_oracle(bits: int = 16) -> str:
 ORACLES["t06_simhash_groups"] = _simhash_oracle(16)
 
 
-# 64-bit SimHash + banded hamming<=3 oracle (judge r2 #4): DuckDB BIGINT
+# 64-bit SimHash + banded hamming<=3 oracle: DuckDB BIGINT
 # can't hold the unsigned 64-bit md5 prefix, but HUGEINT (int128) can —
 # build it from two 32-bit hex halves, fold the 64 bit votes in HUGEINT,
 # convert to two's-complement BIGINT to mirror Spark's signed long, band
@@ -3034,7 +3034,7 @@ ORACLES["t14_corpus_prep"] = (
     """
 )
 
-# round-3 LLM-pipeline gates: PII scrub, paragraph dedup, contamination
+# LLM-pipeline gates: PII scrub, paragraph dedup, contamination
 from .textops import EMAIL_RE as _EMAIL_RE
 from .textops import PHONE_RE as _PHONE_RE
 

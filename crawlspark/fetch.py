@@ -75,8 +75,8 @@ class CorpusFetchBackend(FetchBackend):
     url bloom filters, thousands of buckets — Spark prunes non-matching
     BUCKETS at planning time and the bloom filters skip row groups
     inside the survivors: the parquet-native index lookup, same
-    mechanism as the seen-set fp blooms (measured 2.53x in
-    BENCH/BASELINE.md). The gate must stay SMALL (default 500): pushed-
+    mechanism as the seen-set fp blooms (measured 2.53x on absent-key
+    lookups over 8M fingerprints in 16 files). The gate must stay SMALL (default 500): pushed-
     In evaluation cost grows linearly with the probe count and crosses
     the full-scan join around a few thousand probes (measured numbers
     in CrawlConfig.point_lookup_max_urls).

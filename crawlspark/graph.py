@@ -73,10 +73,10 @@ def pagerank(
     def _ckpt(df: DataFrame) -> DataFrame:
         return df.checkpoint(eager=True) if reliable else df.localCheckpoint(eager=True)
 
-    # r6: materialize the caller's edge plan ONCE — both the node-set
-    # derivation (count below) and the share table consumed it, so an
+    # materialize the caller's edge plan ONCE — both the node-set
+    # derivation (count below) and the share table consume it, so an
     # expensive edge extraction (t28's lag window over the event log)
-    # executed twice before any iteration ran.
+    # would otherwise execute twice before any iteration ran.
     edges = _ckpt(edges)
     # persisted: every iteration's eager checkpoint re-reads the node set
     # (and the count below materializes it anyway)
@@ -498,16 +498,15 @@ def seed_distance(
             eager=True
         )
 
-    # r6: materialize the deduped edge table once — every hop's join (and
+    # materialize the deduped edge table once — every hop's join (and
     # the final union lineage) otherwise re-executes the upstream edge
-    # derivation per hop, the same per-iteration recompute dup_clusters
-    # had. Checkpointed, so blocks release with the result's lineage.
+    # derivation per hop (dup_clusters does the same). Checkpointed, so blocks release with the result's lineage.
     e = _ckpt(
         edges.select(
             F.col(src_col).alias("_s"), F.col(dst_col).alias("_d")
         ).distinct()
     )
-    # r6: the visited set is kept as a UNION of the per-hop checkpointed
+    # the visited set is kept as a UNION of the per-hop checkpointed
     # level sets instead of re-checkpointing the whole accumulated
     # relation every hop — that re-copy was O(V) writes PER HOP
     # (O(V·hops) total); every union child is already materialized, so
@@ -720,12 +719,11 @@ def hits(edges: DataFrame, iters: int = 3) -> DataFrame:
         return df.checkpoint(eager=True) if reliable else df.localCheckpoint(eager=True)
 
     def _norm_ck(df: DataFrame, col: str):
-        # r6: checkpoint the half-step aggregate FIRST, then read the
+        # checkpoint the half-step aggregate FIRST, then read the
         # normalization total from the materialized blocks as a scalar
-        # and divide by it as a literal. The old shape
-        # (df.crossJoin(df.agg(sum))) referenced the propagation
-        # join+agg subtree TWICE in one plan, so every half-step
-        # executed its edge join twice; the long sum and the double
+        # and divide by it as a literal. A df.crossJoin(df.agg(sum))
+        # shape references the propagation join+agg subtree TWICE in one
+        # plan, so every half-step would execute its edge join twice; the long sum and the double
         # division are value-identical either way. The scalar agg is a
         # parallel tree-agg over the bounded node table — no global
         # window, scale shape unchanged.
@@ -934,7 +932,7 @@ def apply_canonical(
     drops = links.filter(
         (~F.col("is_self")) & F.col("target_in_corpus")
     ).select("url", "canonical_url")
-    # r6: drops feeds BOTH the survivor anti-join and the alias counts —
+    # drops feeds BOTH the survivor anti-join and the alias counts —
     # materialize it once so the html regex extraction + membership join
     # does not execute twice. Bounded by |pages with a non-self
     # in-corpus canonical| (two short url columns).

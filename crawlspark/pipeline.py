@@ -64,7 +64,7 @@ def corpus_prep(
         .select("doc_id")
     )
     survivors = base.join(keep_exact, "doc_id", "left_semi")
-    # r6: survivors feeds BOTH the near-dup pair pipeline and the final
+    # survivors feeds BOTH the near-dup pair pipeline and the final
     # anti-join — materialize it once so the annotate + fingerprint
     # dedup subtree does not execute twice (checkpoint, not persist:
     # lineage truncated, blocks released when the result's plan is GC'd,
@@ -123,7 +123,7 @@ def web_clean(
     rows per url) are collapsed FIRST to the lexicographically-min text
     per url — without this, duplicate urls would fan out quadratically
     through the two url equi-joins below and the final left_semi would
-    keep every copy of the winning url (ADVICE r4). min(text) rather
+    keep every copy of the winning url. min(text) rather
     than dropDuplicates keeps the winner deterministic (dropDuplicates
     picks an arbitrary row, which would break cross-engine hash parity).
     One extra partial-aggregated hash-agg; a no-op on the declared
@@ -143,10 +143,10 @@ def web_clean(
         .groupBy("url")
         .agg(F.min("text").alias("text"))
     )
-    # r6: base feeds THREE consumers (soft-404 stats, encoding audit,
+    # base feeds THREE consumers (soft-404 stats, encoding audit,
     # the kept join) and the final self-semi-join doubles the whole
     # subtree again — without materialization the url-dedup aggregate
-    # executed up to 6x per call. One corpus-sized checkpoint each for
+    # executes up to 6x per call. One corpus-sized checkpoint each for
     # base and collapsed replaces those re-executions.
     base = _ckpt(base)
     s404 = tx.soft404_stats(base, short_frac=soft404_short_frac).select(

@@ -326,7 +326,7 @@ def robots_directive_stats(
     t = F.col(text_col)
     is_robots = F.col(url_col).rlike(r"^https?://[^/]+/robots\.txt$")
     # column API (not a string-formatted F.expr): survives column names
-    # that would need backticks, matches the module's style (ADVICE r4)
+    # that would need backticks, matches the module's style
     delay = F.regexp_extract(
         t, r"(?im)^crawl-delay[ \t]*:[ \t]*([0-9.]+)", 1
     ).try_cast("double")
@@ -421,7 +421,7 @@ def robots_violation_audit(
     one per-host hash-agg. Output: (host, n_fetches, n_violations,
     violation_rate rounded 6 dp).
     """
-    # one row per host (ADVICE r5): duplicate host rows — e.g. robots
+    # one row per host: duplicate host rows — e.g. robots
     # re-fetch snapshots — would fan out the left join and inflate
     # n_fetches/n_violations; with_robots documents the same precondition
     r = robots.select(

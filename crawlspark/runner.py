@@ -67,32 +67,24 @@ class CrawlRunner:
         """Run rounds until drained. ``stop_after_round`` simulates a kill
         for resume tests. ``backend`` (fetch.FetchBackend) overrides the
         default corpus-join fetch (N7 seam)."""
-        import os as _os
-        import time as _time
-
         start = self.resume_round()
         counts: list[dict] = []
         r = start
         budget_scale = 1.0
         items_emitted = 0
         # robots is static input for the whole run: count it ONCE so
-        # with_robots can size-gate its broadcast hint (judge r4 #2) —
+        # with_robots can size-gate its broadcast hint —
         # one tiny job per run, not per round
         robots_count = robots.count()
         # remaining-queued is tracked ARITHMETICALLY from each round's own
         # counts (queued' = queued - done - exhausted - denied + new_links;
         # retried rows stay queued) — one state count at start, then the
         # drain is detected without paying a no-op round at the end.
-        _t0 = _time.perf_counter()
         # zero-job resume: the frontier manifest carries the running queued
         # count (seed/ingest/round commits all write queued_after); the
         # state-resolve count job runs only on pre-hint stores
         hint = self.store.queued_after_hint()
         queued = hint if hint is not None else self.queued_count()
-        if _os.environ.get("CRAWLSPARK_TIMING") == "1":
-            print(f"  [round {start - 1}] initial queued "
-                  f"({'manifest hint' if hint is not None else 'count job'}): "
-                  f"{_time.perf_counter() - _t0:.2f}s", flush=True)
         while r < start + max_rounds and queued > 0:
             c = run_round(self.spark, self.store, pages, robots, self.cfg, r,
                           budget_scale=budget_scale, backend=backend,

@@ -112,7 +112,7 @@ class CrawlConfig:
     # 1000-round crawl's disk stays O(state), not O(rounds). 0 disables
     # (keeps full time-travel history).
     vacuum_every: int = 16
-    # Reference-parity delay model (judge r2 #6): the reference does NOT
+    # Reference-parity delay model: the reference does NOT
     # pace itself by robots crawl-delay (ROBOTSTXT_OBEY=False,
     # /root/reference/Douban2/settings.py) — its AUTOTHROTTLE
     # (START_DELAY=3, MAX_DELAY=10, TARGET_CONCURRENCY=2, settings.py:29-33)
@@ -178,7 +178,7 @@ def with_robots(
     Unknown hosts default-allow (reference default-allows on robots fetch
     failure, utils/robots_parser.py:66-70).
 
-    Broadcast gating (judge r4 #2): one row per known host is NOT provably
+    Broadcast gating: one row per known host is NOT provably
     broadcast-sized at the 10^10-URL design point (10^7-10^8 hosts x
     deny-prefix arrays -> multi-GB), and a broadcast HINT is honored
     unconditionally. So the hint is applied only when the caller supplies
@@ -587,7 +587,7 @@ def latency_percentiles(
         F.max("_n").cast("long").alias("n_fetches"), *picks
     )
 
-# -- per-host crawl-budget apportionment (round 4) ------------------------------
+# -- per-host crawl-budget apportionment ----------------------------------------
 
 
 def crawl_budget_plan(

@@ -12,6 +12,20 @@ import os
 from pyspark.sql import SparkSession
 
 
+_MAX_DRIVER_MEM_MB = 48 * 1024
+
+
+def default_driver_memory() -> str:
+    """Driver heap default: half the host's physical memory, capped at
+    48g, so a default session never asks for more heap than the box has.
+    Falls back to the cap where ``os.sysconf`` cannot report memory."""
+    try:
+        total = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    except (ValueError, OSError, AttributeError):
+        return f"{_MAX_DRIVER_MEM_MB}m"
+    return f"{max(1, min(_MAX_DRIVER_MEM_MB, total // 2 // (1 << 20)))}m"
+
+
 def get_spark(
     app_name: str = "crawlspark",
     master: str | None = None,
@@ -40,14 +54,13 @@ def get_spark(
         .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-        # parallelismFirst=true (the Spark default, restored r6): the r5
-        # setting of false let AQE coalesce any shuffle under the 64m
-        # advisory size to ONE partition — a ~50 MB shuffle that fans out
-        # into CPU-heavy work (t04's 71M generated pairs at sf1.0) ran
-        # single-threaded, 159 s instead of seconds. Measured r6: with
-        # true, tiny (<1 MB) shuffles STILL coalesce to 1 partition (the
-        # 1 MB minPartitionSize floor), so the per-stage task tax r5
-        # feared does not occur, while mid-size shuffles keep
+        # parallelismFirst=true (the Spark default): false lets AQE
+        # coalesce any shuffle under the 64m advisory size to ONE
+        # partition — a ~50 MB shuffle that fans out into CPU-heavy work
+        # (t04's 71M generated pairs at sf1.0) ran single-threaded, 159 s
+        # instead of seconds. With true, tiny (<1 MB) shuffles STILL
+        # coalesce to 1 partition (the 1 MB minPartitionSize floor), so
+        # there is no per-stage task tax, while mid-size shuffles keep
         # defaultParallelism — scale-adaptive on any cluster size.
         .config("spark.sql.adaptive.coalescePartitions.parallelismFirst", "true")
         .config("spark.sql.adaptive.advisoryPartitionSizeInBytes", "64m")
@@ -56,7 +69,7 @@ def get_spark(
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         # bound Arrow batch memory for binary-heavy rows: 10k rows/batch
         # (the default) of 50-100 KB pages is a 0.5-1 GB batch per python
-        # worker. Measured on this VM (BENCH/kernel_scaling.json): big
+        # worker. Measured over 24k inflated pages at local[1..32]: big
         # batches × many workers drive allocation churn that shows up as
         # 80-99% SYSTEM time (page-fault/TLB storms) and serialize the
         # whole box; 512 keeps a 100 KB-row batch ~50 MB.
@@ -68,20 +81,19 @@ def get_spark(
         # input-split sizing: 128m (the default) is right at 100 TB but
         # caps a small corpus at a handful of tasks (540 MB corpus -> 5
         # splits -> 5-way parallelism no matter how many cores). 16m keeps
-        # sandbox-scale runs parallel; override for big data.
-        .config(
-            "spark.sql.files.maxPartitionBytes",
-            os.environ.get("CRAWLSPARK_MAX_PARTITION_BYTES", "16m"),
-        )
+        # small-scale runs parallel; override via ``extra_conf`` for big
+        # data.
+        .config("spark.sql.files.maxPartitionBytes", "16m")
         # no locality wait: the default 3 s/locality-level stall is pure
         # loss for this engine — the corpus lives on object storage (no
         # locality to wait for) and per-round stages otherwise idle cores
         # waiting to schedule next to cached blocks. Measured on real
         # separate-JVM executors (local-cluster): ~20% off a full crawl
-        # wall at both 1 and 4 executors (BENCH/BASELINE.md r4).
+        # wall at both 1 and 4 executors.
         .config("spark.locality.wait", "0s")
         .config("spark.ui.enabled", "false")
-        .config("spark.driver.memory", os.environ.get("CRAWLSPARK_DRIVER_MEM", "48g"))
+        .config("spark.driver.memory",
+                os.environ.get("CRAWLSPARK_DRIVER_MEM", default_driver_memory()))
     )
     for k, v in (extra_conf or {}).items():
         b = b.config(k, v)

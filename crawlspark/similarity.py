@@ -106,7 +106,7 @@ def lsh_topk(
     Recall < 1 by design; the tradeoff is the bucket equi-join replacing
     the full cross product."""
     planes = planes or [0, 1, 2, 3]
-    # NOT spread (r6 A/B): unlike cosine_topk, the per-row cosine here
+    # NOT spread (measured A/B): unlike cosine_topk, the per-row cosine here
     # runs only on the bucket-join candidates, and the bucket projection
     # is too cheap to pay a repartition for (sf0.1: 0.57 s plain vs 0.67
     # spread; sf1.0: tie).
@@ -229,7 +229,7 @@ def embedding_near_dup(
     threshold), bucketed by sign-LSH so the pair join never goes
     quadratic over the whole corpus."""
     planes = planes or [0, 1, 2, 3]
-    # r6: the within-bucket pair cosines (the operator's real cost — for
+    # the within-bucket pair cosines (the operator's real cost — for
     # a corpus of n docs over 2^|planes| buckets, ~n^2/2^(b+1) 64-dim
     # dot products) otherwise run in the lone scan task of a
     # single-row-group embeddings parquet: the bucket join broadcasts
@@ -286,7 +286,7 @@ def semdedup_removals(
     )
 
 
-# -- deterministic JL random projection (round 4) -------------------------------
+# -- deterministic JL random projection -----------------------------------------
 
 
 def jl_signs(out_dim: int, in_dim: int, seed: str = "jl") -> list[list[int]]:

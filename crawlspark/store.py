@@ -408,8 +408,8 @@ class FrontierStore:
         resolves with partial (map-side) aggregation — each input split
         pre-resolves its own rows before the exchange, so the shuffle
         carries ~distinct-fps rows instead of the whole log, and no
-        per-partition sort runs at all. A row_number() window (round 1)
-        cannot partial-aggregate: it shuffled the entire log every round.
+        per-partition sort runs at all. A row_number() window cannot
+        partial-aggregate: it would shuffle the entire log every round.
         op_seq is unique per fp (insert=4(r+1)+1 happens once per fp thanks
         to the seen-set; mark=4r+2 at most once per round), so max_by is
         deterministic.
@@ -512,7 +512,7 @@ class FrontierStore:
         resume rolls the siblings back to it).
 
         ``corpus_dir``: emit_text rounds write the corpus files as their
-        OWN staging dir (run_round's job 2 — the text never rides the
+        OWN staging dir (run_round's action 2 — the text never rides the
         tee); when set, the corpus commit references it instead of the
         tee's ``_table=corpus`` partition.
         """
@@ -593,10 +593,9 @@ class FrontierStore:
         return int(q) if q is not None else None
 
     def vacuum(self, keep_from_round: int | None = None) -> dict:
-        """Garbage-collect storage (ADVICE r2: wide tee dirs under
-        {root}/shared/ were referenced by absolute path and never deleted,
-        so a long crawl grew O(rounds) even after compaction dropped the
-        references).
+        """Garbage-collect storage (wide tee dirs under {root}/shared/ are
+        referenced by absolute path; without this a long crawl grows
+        O(rounds) even after compaction drops the references).
 
         Two steps, Iceberg's expire_snapshots + remove_orphan_files:
 

@@ -291,7 +291,7 @@ def stream_crawl_rounds(
     counts: list[dict] = []
     budget_scale = 1.0
     # static robots input counted once for the whole stream — same
-    # broadcast size gate as the batch runner (judge r4 #2)
+    # broadcast size gate as the batch runner
     robots_count = robots.count()
     for _ in range(max_rounds):
         next_round = runner.resume_round()

@@ -219,15 +219,3 @@ def inflate_pages(pages_df, n_pad_words: int = 2000):
     inflated_text = F.concat(F.col("text"), F.lit(" "), pad_words)
     return pages_df.withColumn("html", inflated_html).withColumn("text", inflated_text)
 
-
-def write_site(spark, spec: SiteSpec, out_dir: str) -> dict[str, str]:
-    """Materialize the corpus as parquet under ``out_dir``; returns paths."""
-    from .schema import PAGES, ROBOTS, SEEDS
-
-    data = generate_site(spec)
-    paths = {}
-    for name, schema in (("pages", PAGES), ("seeds", SEEDS), ("robots", ROBOTS)):
-        p = f"{out_dir}/{name}.parquet"
-        spark.createDataFrame(data[name], schema=schema).write.mode("overwrite").parquet(p)
-        paths[name] = p
-    return paths

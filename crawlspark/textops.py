@@ -156,7 +156,7 @@ class PandasScorer(TextScorer):
 
 
 class NBScorer(TextScorer):
-    """The trained in-engine model as a corpus_prep scorer (judge r4 #4):
+    """The trained in-engine model as a corpus_prep scorer:
     language comes from :func:`nb_lang_id` — the char-trigram multinomial
     Naive Bayes classifier trained on labeled rows (t69, held-out eval
     t70) — instead of the stopword heuristic; quality delegates to a
@@ -232,7 +232,7 @@ def profile(documents: DataFrame) -> DataFrame:
     )
 
 
-# -- PII scrubbing (round 3) ---------------------------------------------------
+# -- PII scrubbing -------------------------------------------------------------
 
 # Conservative patterns chosen to behave IDENTICALLY in Java regex (Spark)
 # and RE2 (DuckDB): no lookarounds, no backrefs.
@@ -269,7 +269,7 @@ def pii_audit(documents: DataFrame) -> DataFrame:
     )
 
 
-# -- paragraph-level dedup (round 3) ------------------------------------------
+# -- paragraph-level dedup -----------------------------------------------------
 
 
 def paragraph_dedup_groups(
@@ -301,7 +301,7 @@ def paragraph_dedup_groups(
     )
 
 
-# -- benchmark-contamination check (round 3) ----------------------------------
+# -- benchmark-contamination check ---------------------------------------------
 
 
 def contamination_check(
@@ -321,7 +321,7 @@ def contamination_check(
         .distinct()
     )
     probe_ids = probe.select("doc_id")
-    # r6: the corpus-side shingle explode is the operator's heavy term —
+    # the corpus-side shingle explode is the operator's heavy term —
     # parallelize it when the input is an unsplittable small parquet
     # (no-op at corpus scale; guide §2.5)
     doc_sh = spread_input(documents).join(probe_ids, "doc_id", "left_anti").select(
@@ -335,7 +335,7 @@ def contamination_check(
     )
 
 
-# -- Gopher-style repetition signals (round 3) --------------------------------
+# -- Gopher-style repetition signals -------------------------------------------
 
 
 def repetition_signals(
@@ -355,7 +355,7 @@ def repetition_signals(
     shuffle keys are (doc_id, line/gram), so heavy repetition inside one
     doc stays one group and the plan scales like exact dedup. Tiebreak
     for the top 2-gram is (count DESC, gram ASC), deterministic."""
-    # r6: parallelize the scan-side heavy lifting (explode/trigram/
+    # parallelize the scan-side heavy lifting (explode/trigram/
     # line split) when the input is an unsplittable small parquet;
     # no-op at corpus scale and for well-partitioned inputs
     documents = spread_input(documents)
@@ -402,7 +402,7 @@ def repetition_signals(
     )
 
 
-# -- C4-style global line dedup with keep-first reconstruction (round 4) -------
+# -- C4-style global line dedup with keep-first reconstruction -----------------
 
 
 def line_dedup_corpus(
@@ -558,7 +558,7 @@ def host_boilerplate_removal(
     )
 
 
-# -- deterministic domain-mixture sampling (round 4) ---------------------------
+# -- deterministic domain-mixture sampling -------------------------------------
 
 
 def sample_fraction_col(key: Column, salt: str = "mix") -> Column:
@@ -598,7 +598,7 @@ def stratified_sample(
     return documents.withColumn("_u", u).filter(F.col("_u") < rate).drop("_u")
 
 
-# -- exact quality deciles via bounded-cardinality histogram (round 4) ---------
+# -- exact quality deciles via bounded-cardinality histogram -------------------
 
 
 def quality_deciles(documents: DataFrame, n_buckets: int = 10) -> DataFrame:
@@ -643,7 +643,7 @@ def quality_deciles(documents: DataFrame, n_buckets: int = 10) -> DataFrame:
     )
 
 
-# -- ExactSubstr-style duplicated-span audit (round 4) --------------------------
+# -- ExactSubstr-style duplicated-span audit -----------------------------------
 
 
 def window_dup_stats(documents: DataFrame, w: int = 8) -> DataFrame:
@@ -673,8 +673,7 @@ def window_dup_stats(documents: DataFrame, w: int = 8) -> DataFrame:
     exploded relation on BOTH join branches, and Catalyst's column
     pruning makes the two partial-agg subtrees non-identical (the df
     branch drops the hits count), so ReuseExchange can NOT dedupe them
-    — the full corpus scan + explode runs twice (the exact
-    recomputation VERDICT r3 #7 flagged on t04). Here the exploded
+    — the full corpus scan + explode runs twice. Here the exploded
     relation has exactly one consumer, every aggregate partial-combines
     map-side (a boilerplate window in 10^8 docs reduces to per-mapper
     counts — no skewed join probe side at all), and the only join left
@@ -683,7 +682,7 @@ def window_dup_stats(documents: DataFrame, w: int = 8) -> DataFrame:
 
     Output: (doc_id, n_windows, n_dup_windows, dup_fraction) for docs
     containing at least one window that also appears in another doc."""
-    # r6: parallelize the scan-side heavy lifting (explode/trigram/
+    # parallelize the scan-side heavy lifting (explode/trigram/
     # line split) when the input is an unsplittable small parquet;
     # no-op at corpus scale and for well-partitioned inputs
     documents = spread_input(documents)
@@ -731,7 +730,7 @@ def window_dup_stats(documents: DataFrame, w: int = 8) -> DataFrame:
     )
 
 
-# -- document-frequency vocabulary / IDF table (round 4) ------------------------
+# -- document-frequency vocabulary / IDF table ---------------------------------
 
 
 def df_vocabulary(
@@ -891,7 +890,7 @@ def decontaminate(
     return clean.join(hits, "doc_id", "left_anti")
 
 
-# -- first-fail quality funnel (round 4) ---------------------------------------
+# -- first-fail quality funnel -------------------------------------------------
 
 FUNNEL_RULES = (
     "too_short",
@@ -992,7 +991,7 @@ def quality_funnel(
     )
 
 
-# -- sequence packing (round 4) ------------------------------------------------
+# -- sequence packing ----------------------------------------------------------
 
 
 def assign_sequences(
@@ -1221,7 +1220,7 @@ def exactsubstr_removal(documents: DataFrame, w: int = 8) -> DataFrame:
     all (its dedup plane is the URL dupefilter, dupefilter.py); this is
     training-data surface the north rule's corpus consumer needs.
     """
-    # r6: parallelize the scan-side heavy lifting (explode/trigram/
+    # parallelize the scan-side heavy lifting (explode/trigram/
     # line split) when the input is an unsplittable small parquet;
     # no-op at corpus scale and for well-partitioned inputs
     documents = spread_input(documents)
@@ -1474,7 +1473,7 @@ def bigram_lm_perplexity(
     (most fluent) ... n_buckets = tail.
     """
     cols = ["doc_id"] + ([lang_col] if lang_col else [])
-    # NOT spread (r6 A/B): three consumers re-pay the repartition
+    # NOT spread (measured A/B): three consumers re-pay the repartition
     # shuffle each (t58 1.2->2.0 measured); see _hashed_bigram_buckets.
     toks = documents.select(
         *cols,
@@ -1521,7 +1520,7 @@ def bigram_lm_perplexity(
         "bucket", F.ntile(int(n_buckets)).over(w).cast("int")
     )
 
-# -- DSIR hashed-ngram importance weights (round 4) -----------------------------
+# -- DSIR hashed-ngram importance weights --------------------------------------
 
 
 def _hashed_bigram_buckets(
@@ -1536,7 +1535,7 @@ def _hashed_bigram_buckets(
     (same trick as stratified_sample / sequence packing): bucket =
     conv(md5('salt:w1 w2')[0:8], 16, 10) % n_buckets. Docs with < 2
     tokens have no bigrams and drop out."""
-    # NOT spread (r6 A/B): the bigram relation is consumed by MULTIPLE
+    # NOT spread (measured A/B): the bigram relation is consumed by MULTIPLE
     # aggregates in every caller, so a round-robin repartition re-pays
     # its shuffle per consumer and lost at sf0.1 (t59 1.3->1.4, t61
     # 1.5->2.5). spread_input stays for single-consumer heavy explodes.
@@ -2036,7 +2035,7 @@ def nb_lang_id(
     (t70 composes this with the md5 split coin).
     Output: (id_col, label_col, predicted, score_micro).
     """
-    # r6: parallelize the scan-side heavy lifting (explode/trigram/
+    # parallelize the scan-side heavy lifting (explode/trigram/
     # line split) when the input is an unsplittable small parquet;
     # no-op at corpus scale and for well-partitioned inputs
     documents = spread_input(documents)
@@ -2067,7 +2066,7 @@ def nb_lang_id(
     ct = mtrigs.groupBy(label_col, "trig").agg(
         F.count("*").cast("long").alias("c")
     )
-    # r6: the (lang, trigram) count table feeds THREE consumers (n_l,
+    # the (lang, trigram) count table feeds THREE consumers (n_l,
     # vocab, the smoothed log-prob table) — without materialization each
     # re-runs the corpus trigram explode+aggregate. Bounded by
     # |langs|x|vocab|; checkpointed so blocks release with the result.
@@ -2793,11 +2792,11 @@ def host_concentration(
     Output: ONE row (n_docs, n_hosts, hhi_pico, top1_share,
     top10_share), shares rounded 6 dp.
 
-    r6 (ADVICE r5 / VERDICT task 5): the card's single row is computed
-    EAGERLY inside a try/finally that unpersists the per-host aggregate
-    before returning — CacheManager holds DataFrame cache blocks until an
-    explicit unpersist, so the old lazy shape leaked one |hosts|-sized
-    cache entry per invocation for the session lifetime. The returned
+    The card's single row is computed EAGERLY inside a try/finally that
+    unpersists the per-host aggregate before returning — CacheManager
+    holds DataFrame cache blocks until an explicit unpersist, so a lazy
+    shape would leak one |hosts|-sized cache entry per invocation for the
+    session lifetime. The returned
     one-row frame is a materialized literal; every invocation still
     recomputes from the input (nothing is memoized across calls).
     """

@@ -117,3 +117,15 @@ def test_shard_plan_two_phase_prefix_sum(spark):
     s = plans.explain_str(df)
     assert s.count("SinglePartition") <= 1, s
     assert not plans.has_python_udf(df)
+
+
+def test_default_driver_heap_fits_host(spark):
+    """The default driver heap is at most half the host's memory and
+    never above 48g; the test session runs with it unless overridden."""
+    from crawlspark.session import default_driver_memory
+
+    mb = int(default_driver_memory().removesuffix("m"))
+    phys_mb = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES") >> 20
+    assert 1 <= mb <= min(48 * 1024, phys_mb // 2)
+    if "CRAWLSPARK_DRIVER_MEM" not in os.environ:
+        assert spark.conf.get("spark.driver.memory") == f"{mb}m"

@@ -1,17 +1,18 @@
-"""Training-data pipeline operators: dedup, similarity, text analysis,
-multimodal plumbing — unit tests with hand-computable oracles plus
-DuckDB cross-checks on the real testdata tables."""
+"""Training-data pipeline operators: dedup, similarity, text analysis —
+unit tests with hand-computable oracles plus DuckDB cross-checks on the
+real testdata tables."""
 
 from __future__ import annotations
 
 import math
 import os
+from decimal import Decimal
 
 import duckdb
 import pyspark.sql.functions as F
 import pytest
 
-from crawlspark import dedup, multimodal, similarity, textops
+from crawlspark import dedup, similarity, textops
 
 SF_DIR = os.environ.get("SPARK_GRAFT_TEST_SF", "/root/testdata/sf0.001")
 
@@ -128,25 +129,6 @@ def test_textops_profile(spark):
             FROM '{SF_DIR}/documents.parquet' WHERE doc_id = 0"""
     ).fetchone()[0]
     assert row["fingerprint"] == want
-
-
-def test_multimodal_plumbing(spark):
-    media = multimodal.synthetic_media(spark, n=30)
-    feats = multimodal.extract_features(media, dim=8, fake=True).collect()
-    assert len(feats) == 30
-    by_id = {r["media_id"]: r for r in feats}
-    assert all(len(r["feature"]) == 8 for r in feats)
-    # deterministic: same payload -> same feature
-    again = {r["media_id"]: r for r in multimodal.extract_features(media, dim=8, fake=True).collect()}
-    assert by_id[0]["feature"] == again[0]["feature"]
-    assert by_id[0]["sha256"] == again[0]["sha256"]
-    # real decode is stubbed
-    with pytest.raises(Exception):
-        multimodal.extract_features(media, dim=8, fake=False).collect()
-    # frame sampling plan
-    frames = multimodal.frame_sample(media, every_ms=500)
-    one = frames.groupBy("media_id").count().collect()
-    assert all(r["count"] >= 2 for r in one)
 
 
 def test_ivf_topk_recall_vs_brute_force(spark):
@@ -276,6 +258,22 @@ def test_dup_clusters_hand_computed(spark):
         # a 40-long chain with max_iters=2 cannot converge
         chain = spark.createDataFrame([(i, i + 1) for i in range(40)], ["doc_a", "doc_b"])
         dedup.dup_clusters(chain, max_iters=2)
+
+    # fractional ids: cast to decimal(38,0) the label sum cannot see
+    # 1.3 -> 1.2 -> 1.1 (1.1 and 1.2 both round to 1), so they must take
+    # the join convergence probe
+    frac = spark.createDataFrame([(1.1, 1.2), (1.2, 1.3)], ["doc_a", "doc_b"])
+    got = {r["doc_id"]: r["cluster_id"] for r in dedup.dup_clusters(frac).collect()}
+    assert got == {1.1: 1.1, 1.2: 1.1, 1.3: 1.1}
+
+    # integral decimal ids whose label sum overflows decimal(38,0): a null
+    # sum is never read as converged
+    big = [Decimal(6 * 10**37 + i) for i in range(3)]
+    huge = spark.createDataFrame(
+        [(big[1], big[2]), (big[2], big[0])], "doc_a decimal(38,0), doc_b decimal(38,0)"
+    )
+    got = {r["doc_id"]: r["cluster_id"] for r in dedup.dup_clusters(huge).collect()}
+    assert got == {b: big[0] for b in big}
 
 
 def test_dup_clusters_string_ids(spark):
