@@ -31,9 +31,10 @@ exactly. Bounds: rounds < 2^31, parent_rn < 2^20, links/page < 2^12.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, Observation, SparkSession, Window
 from pyspark.sql import functions as F
 
+from .fetch import CorpusFetchBackend
 from .kernels import canonicalize_urls, extract_records_and_links, fingerprint_col, host_bucket_col, host_col
 from .schema import (
     FRONTIER,
@@ -50,6 +51,28 @@ from .scheduler import CrawlConfig, link_priority_col, pop_slice
 from .store import FrontierStore
 
 _FRONTIER_COLS = [f.name for f in FRONTIER.fields]
+
+# Broadcast size gate for the per-round slice joins (F1 fetch join + the
+# done/missed/fetch_log semi-joins): a broadcast HINT is honored
+# unconditionally by Spark — AQE never demotes it — so a 10^7-row round
+# slice hinted broadcast is a driver/executor OOM, not a slow plan.
+# run_round broadcasts only when the round's ACTUAL popped count (known
+# before the fetch) is at or under this bound; bigger slices take a plain
+# equi-join on url and AQE/sort-merge handles them. 1M urls ~ 80 MB
+# serialized — safe for standard 4-8 GB executors.
+BROADCAST_SLICE_MAX_ROWS = 1_000_000
+# Tiny-slice point-lookup gate (seed rounds, retry tails): when the round's
+# actual popped count is at or under this, the default fetch skips the
+# corpus-scanning join entirely and pushes the url list into the parquet
+# scan as an In() filter — bucket pruning (at production bucket counts,
+# e.g. 4096) plus row-group skipping via url blooms instead of an
+# O(corpus) scan to fetch a handful of URLs. The driver-side url collect is
+# bounded by this gate. Deliberately small: pushed-In evaluation cost grows
+# linearly with the probe count (measured on a 500k-page bucketed corpus,
+# warm cache: In(200) 4.7 s, In(1500) 10.8 s, In(3000) 18.5 s vs 4.0 s for
+# the scan+broadcast join), so thousands of probes are better served by
+# the join.
+POINT_LOOKUP_MAX_URLS = 500
 
 # Unified "round delta" schema: the single per-round write carries every
 # output table's rows, tagged by _table; each SnapshotStore prunes back to
@@ -82,7 +105,11 @@ def _pad(df: DataFrame, table: str) -> DataFrame:
     return df.select(F.lit(table).alias("_table"), *cols)
 
 
-def _write_tee(store: FrontierStore, tee: DataFrame) -> str:
+def _count_where(cond):
+    return F.sum(F.when(cond, 1).otherwise(0))
+
+
+def _write_tee(store: FrontierStore, tee: DataFrame) -> tuple[str, bool]:
     """The round's ONE table write: rebalance + partitionBy(_table)
     parquet write; per-table counts are collected by the Observation the
     caller attached — no separate count jobs, no collect()s.
@@ -119,48 +146,67 @@ def _write_tee(store: FrontierStore, tee: DataFrame) -> str:
     return shared, has_data
 
 
+def _tee_new_urls(
+    store: FrontierStore,
+    urls: DataFrame,
+    cfg: CrawlConfig,
+    discovered_round: int,
+    seen: DataFrame | None = None,
+) -> tuple[str, dict | None]:
+    """Write (url, priority, seq) rows as queued depth-0 frontier rows plus
+    their seen-set rows, in one tee write: canonicalize, fingerprint,
+    bucket, keep the lowest seq per fp, drop fps already in ``seen``.
+    Inserts carry op_seq = 1, so any later mark beats them. Returns the tee
+    dir and the per-table row counts — None when nothing was written."""
+    rows = (
+        urls.withColumn("url", canonicalize_urls(F.col("url")))
+        .withColumn("fp", fingerprint_col(F.col("url")))
+        .withColumn("host", host_col(F.col("url")))
+        .withColumn("host_bucket", host_bucket_col(F.col("host"), cfg.n_buckets))
+        .withColumn("depth", F.lit(0))
+        .withColumn("status", F.lit(STATUS_QUEUED))
+        .withColumn("retry_count", F.lit(0))
+        .withColumn("discovered_round", F.lit(discovered_round))
+        .withColumn("op_seq", F.lit(1).cast("long"))
+    )
+    w = Window.partitionBy("fp").orderBy(F.asc("seq"))
+    rows = rows.withColumn("_rn", F.row_number().over(w)).filter(F.col("_rn") == 1).drop("_rn")
+    rows = rows.select(*_FRONTIER_COLS)
+    if seen is not None:
+        rows = rows.join(seen.select("fp"), "fp", "left_anti")
+    seen_rows = rows.select(
+        "fp", "url", "host_bucket", F.lit(discovered_round).alias("first_round")
+    )
+    tee = _pad(rows, "frontier").unionByName(_pad(seen_rows, "seen"))
+    obs = Observation()
+    tee = tee.observe(
+        obs,
+        _count_where(F.col("_table") == "frontier").alias("frontier"),
+        _count_where(F.col("_table") == "seen").alias("seen"),
+    )
+    shared, has_data = _write_tee(store, tee)
+    if not has_data:
+        return shared, None
+    vals = obs.get
+    return shared, {"frontier": int(vals["frontier"] or 0), "seen": int(vals["seen"] or 0)}
+
+
 def seed_frontier(spark: SparkSession, store: FrontierStore, seeds: DataFrame, cfg: CrawlConfig) -> int:
     """Round-0 seed injection (Q3/Q10): canonicalize, fingerprint, bucket,
     insert into frontier + seen — one tee write (4 Spark jobs on the
     traced ``crawl_polite`` benchmark, seed 7). Idempotent re-init = a new
     snapshot chain (mirror of the reference deleting old Redis keys in
     its scripts/run_crawler.py)."""
-    from pyspark.sql import Observation
-
-    canon = seeds.withColumn("url", canonicalize_urls(F.col("url")))
-    rows = (
-        canon.withColumn("fp", fingerprint_col(F.col("url"), already_canonical=True))
-        .withColumn("host", host_col(F.col("url")))
-        .withColumn("host_bucket", host_bucket_col(F.col("host"), cfg.n_buckets))
-        .withColumn("depth", F.lit(0))
-        .withColumn("status", F.lit(STATUS_QUEUED))
-        .withColumn("retry_count", F.lit(0))
-        .withColumn("discovered_round", F.lit(0))
-        .withColumn("op_seq", F.lit(1).cast("long"))
-    )
-    w = Window.partitionBy("fp").orderBy(F.asc("seq"))
-    rows = rows.withColumn("_rn", F.row_number().over(w)).filter(F.col("_rn") == 1).drop("_rn")
-    rows = rows.select(*_FRONTIER_COLS)
-    seen_rows = rows.select("fp", "url", "host_bucket", F.lit(0).alias("first_round"))
-    tee = _pad(rows, "frontier").unionByName(_pad(seen_rows, "seen"))
-    obs = Observation()
-    tee = tee.observe(
-        obs,
-        F.sum(F.when(F.col("_table") == "frontier", 1).otherwise(0)).alias("frontier"),
-        F.sum(F.when(F.col("_table") == "seen", 1).otherwise(0)).alias("seen"),
-    )
-    shared, has_data = _write_tee(store, tee)
-    if not has_data:
+    shared, n = _tee_new_urls(store, seeds, cfg, 0)
+    if n is None:
         raise ValueError("seed_frontier: empty seed set")
-    vals = obs.get
-    n_frontier = int(vals["frontier"] or 0)
     return store.commit_round(
         shared,
-        {"frontier": n_frontier, "seen": int(vals["seen"] or 0)},
+        n,
         round_no=-1,
         # queued_after: running queued count carried in the manifest so
         # resume never pays a state-resolve count job (store.queued_after_hint)
-        meta={"phase": "seed", "queued_after": n_frontier},
+        meta={"phase": "seed", "queued_after": n["frontier"]},
     )
 
 
@@ -188,8 +234,6 @@ def ingest_urls(
     current round keeps resume at last+1 with all snapshots intact.
     Passing an explicit round_no below the current round raises.
     """
-    from pyspark.sql import Observation
-
     last = store.last_committed_round()
     if round_no is None:
         round_no = last if last is not None else -1
@@ -201,38 +245,10 @@ def ingest_urls(
             "the current round"
         )
 
-    canon = urls.withColumn("url", canonicalize_urls(F.col("url")))
-    rows = (
-        canon.withColumn("fp", fingerprint_col(F.col("url"), already_canonical=True))
-        .withColumn("host", host_col(F.col("url")))
-        .withColumn("host_bucket", host_bucket_col(F.col("host"), cfg.n_buckets))
-        .withColumn("depth", F.lit(0))
-        .withColumn("status", F.lit(STATUS_QUEUED))
-        .withColumn("retry_count", F.lit(0))
-        .withColumn("discovered_round", F.lit(max(round_no, 0)))
-        .withColumn("op_seq", F.lit(1).cast("long"))
-    )
-    w = Window.partitionBy("fp").orderBy(F.asc("seq"))
-    rows = rows.withColumn("_rn", F.row_number().over(w)).filter(F.col("_rn") == 1).drop("_rn")
-    rows = rows.select(*_FRONTIER_COLS)
-    seen = store.seen_state()
-    if seen is not None:
-        rows = rows.join(seen.select("fp"), "fp", "left_anti")
-    seen_rows = rows.select(
-        "fp", "url", "host_bucket", F.lit(max(round_no, 0)).alias("first_round")
-    )
-    tee = _pad(rows, "frontier").unionByName(_pad(seen_rows, "seen"))
-    obs = Observation()
-    tee = tee.observe(
-        obs,
-        F.sum(F.when(F.col("_table") == "frontier", 1).otherwise(0)).alias("frontier"),
-        F.sum(F.when(F.col("_table") == "seen", 1).otherwise(0)).alias("seen"),
-    )
-    shared, has_data = _write_tee(store, tee)
-    if not has_data:
+    shared, n = _tee_new_urls(store, urls, cfg, max(round_no, 0),
+                              seen=store.seen_state())
+    if n is None:
         return {"ingested": 0}
-    vals = obs.get
-    n = int(vals["frontier"] or 0)
     meta = {"phase": "ingest"}
     # Commit-time re-reads (concurrent stream_url_ingest mode):
     # a run_round commit may have landed while our tee write ran. (a) Never
@@ -247,14 +263,9 @@ def ingest_urls(
         round_no = last_now
     prior = store.queued_after_hint()
     if prior is not None:
-        meta["queued_after"] = prior + n
-    store.commit_round(
-        shared,
-        {"frontier": n, "seen": int(vals["seen"] or 0)},
-        round_no,
-        meta=meta,
-    )
-    return {"ingested": n}
+        meta["queued_after"] = prior + n["frontier"]
+    store.commit_round(shared, n, round_no, meta=meta)
+    return {"ingested": n["frontier"]}
 
 
 def rescore_frontier(
@@ -429,8 +440,6 @@ def run_round(
     frontier LAST — the frontier snapshot is the round's atomic commit
     point (resume rolls siblings back to it, SnapshotStore.rollback_to_round).
     """
-    from pyspark.sql import Observation
-
     state = store.frontier_state()
     if state is None:
         return {"popped": 0}
@@ -463,25 +472,22 @@ def run_round(
 
     # F1 fetch, behind the FetchBackend seam (N7). Broadcast gating: the
     # popped count is already known (action 1), so the slice joins broadcast
-    # only when the round is provably small (cfg.broadcast_slice_max_rows);
+    # only when the round is provably small (BROADCAST_SLICE_MAX_ROWS);
     # a 10^7-row round at the 10^10-URL design point instead takes plain
     # equi-joins on url (sort-merge / AQE — pages bucketed by url make it
     # cheap), because a broadcast HINT is honored regardless of size and
     # would OOM the driver. Misses are computed against the (slice-sized)
     # hit set, never by anti-joining the full corpus.
-    small_slice = n_popped_pre <= cfg.broadcast_slice_max_rows
+    small_slice = n_popped_pre <= BROADCAST_SLICE_MAX_ROWS
     _bcast = F.broadcast if small_slice else (lambda df: df)
     if backend is None:
-        from .fetch import CorpusFetchBackend
-
         backend = CorpusFetchBackend(
             pages,
             broadcast_slice=small_slice,
             # tiny rounds (seeds, retry tails) take the pushed-In point
             # lookup instead of scanning the corpus to probe a broadcast
             # hash relation — see CorpusFetchBackend docstring
-            point_lookup=0 < n_popped_pre <= cfg.point_lookup_max_urls,
-            pages_unique_by_url=cfg.corpus_unique_by_url,
+            point_lookup=0 < n_popped_pre <= POINT_LOOKUP_MAX_URLS,
         )
     slice_ctx = sliced.select("fp", "url", "host", "host_bucket", "priority", "depth", "seq", "retry_count", "discovered_round", "_rn")
     hits_raw = backend.fetch(slice_ctx.select("url"))
@@ -515,11 +521,11 @@ def run_round(
     # (the input of the LLM-pipeline plane). Off by default: the
     # Douban-parity round consumes only fields+links, and text is the
     # round's largest transfer term (see the include_text note).
-    emit_text = getattr(cfg, "emit_text", False)
+    emit_text = cfg.emit_text
     ext = extract_records_and_links(hits_raw, include_text=emit_text)
     if not emit_text:
         ext = ext.drop("text")
-    if not getattr(backend, "unique_by_url", False):
+    if not backend.unique_by_url:
         ext = ext.dropDuplicates(["url"])
     ext = ext.join(_bcast(slice_ctx), "url", "inner")
     corpus_dir = None
@@ -585,10 +591,10 @@ def run_round(
         .filter(F.col("url").startswith("http"))
         .withColumn("depth", (F.col("parent_depth") + 1).cast("int"))
         .filter(F.col("depth") <= cfg.max_depth)
-        .withColumn("fp", fingerprint_col(F.col("url"), already_canonical=True))
+        .withColumn("fp", fingerprint_col(F.col("url")))
         .withColumn("host", host_col(F.col("url")))
         .withColumn("host_bucket", host_bucket_col(F.col("host"), cfg.n_buckets))
-        .withColumn("priority", link_priority_col(F.col("url"), cfg.priority_t1, cfg.priority_t2))
+        .withColumn("priority", link_priority_col(F.col("url")))
         .withColumn(
             "seq",
             # bounds enforced loudly: a page with >= 2^12 links
@@ -683,9 +689,6 @@ def run_round(
     # (emit_text: the corpus files were already written by action 2 — the tee
     # never carries the text a second time; commit_round references the
     # staging dir directly)
-    def _n(cond):
-        return F.sum(F.when(cond, 1).otherwise(0))
-
     # action 4 of 4: the tee write. Only seen/results counts are unknown
     # at this point (popped/denied from action 1, fetched from action 2,
     # new from action 3) — the attached Observation collects them during
@@ -693,9 +696,9 @@ def run_round(
     obs = Observation()
     tee = tee.observe(
         obs,
-        _n(F.col("_table") == "seen").alias("seen"),
-        _n(F.col("_table") == "results").alias("results"),
-        _n(
+        _count_where(F.col("_table") == "seen").alias("seen"),
+        _count_where(F.col("_table") == "results").alias("results"),
+        _count_where(
             (F.col("_table") == "frontier")
             & (F.col("op_seq") == F.lit(round_no * 4 + 2))
             & (F.col("status") == STATUS_EXHAUSTED)

@@ -19,12 +19,13 @@ worker. The driver never collects the host set, so a design-point round
 (10^7 URLs, ~10^6 distinct hosts) resolves in parallel across executors
 instead of serially on the driver. The application join is broadcast-
 hinted only when the caller's ``n_hosts_hint`` proves the map small
-(same gate policy as robots, N4); otherwise AQE decides from runtime
-stats. A driver-side path (``cache=``) remains for provably tiny rounds
-and for tests that need driver-visible hit/miss counters.
+(the robots gate, scheduler.BROADCAST_ROBOTS_MAX_HOSTS, N4); otherwise
+AQE decides from runtime stats. A driver-side path (``cache=``) remains
+for provably tiny rounds and for tests that need driver-visible hit/miss
+counters.
 
 No network exists in this sandbox, so the default resolver is an
-explicit seam (same pattern as fetch.HttpFetchBackend and
+explicit seam (same pattern as fetch.FetchBackend and
 textops.PandasScorer): ``DeterministicResolver`` derives a stable fake
 address from the host's md5 for tests (md5 rather than sha1 so the
 driver gate `c06_dns_map` can verify the whole prefetch+broadcast-join
@@ -40,6 +41,8 @@ import time
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+from .scheduler import BROADCAST_ROBOTS_MAX_HOSTS
 
 
 class Resolver:
@@ -179,8 +182,7 @@ def with_addrs(spark: SparkSession, slice_df: DataFrame,
                cache: DnsCache | None = None, *,
                resolver_factory=None, default_ttl: float = 3600.0,
                cache_key: str | None = None,
-               n_hosts_hint: int | None = None,
-               broadcast_map_max_hosts: int = 1_000_000) -> DataFrame:
+               n_hosts_hint: int | None = None) -> DataFrame:
     """Annotate a round's popped slice with resolved addresses.
 
     Two prefetch shapes behind one seam:
@@ -189,7 +191,7 @@ def with_addrs(spark: SparkSession, slice_df: DataFrame,
       :func:`resolve_hosts` resolves the distinct hosts worker-side, then
       the (host, addr) map joins back. The join is broadcast-HINTED only
       when the caller supplies ``n_hosts_hint`` at or under
-      ``broadcast_map_max_hosts`` (admission control knows the admitted
+      ``BROADCAST_ROBOTS_MAX_HOSTS`` (admission control knows the admitted
       host count); otherwise un-hinted — AQE broadcasts small maps from
       runtime stats and shuffle-joins web-scale ones. No driver-side
       collect anywhere on this path.
@@ -208,7 +210,7 @@ def with_addrs(spark: SparkSession, slice_df: DataFrame,
         m = resolve_hosts(slice_df.select("host").distinct(),
                           resolver_factory, default_ttl=default_ttl,
                           cache_key=cache_key)
-        if n_hosts_hint is not None and n_hosts_hint <= broadcast_map_max_hosts:
+        if n_hosts_hint is not None and n_hosts_hint <= BROADCAST_ROBOTS_MAX_HOSTS:
             m = F.broadcast(m)
         return slice_df.join(m, "host", "left")
     hosts = [r["host"] for r in slice_df.select("host").distinct().collect()]

@@ -10,10 +10,14 @@ round's popped URL slice to (url, html) rows; everything downstream
 
 Default backend: the corpus join — "fetch" = lookup into the
 Common-Crawl-style pages table, per BASELINE.json input_hint. A real
-deployment slots an HTTP backend here without touching the scheduler:
-politeness is already enforced UPSTREAM by admission control (the slice
-handed to fetch() is exactly the set of URLs the budgets allow this
-round), so the backend only does transport.
+deployment subclasses FetchBackend with an HTTP transport (a mapInPandas
+of pooled GETs over url batches; failures yield no row so the engine's
+retry path engages) without touching the scheduler: politeness is
+already enforced UPSTREAM by admission control (the slice handed to
+fetch() is exactly the set of URLs the budgets allow this round), so the
+backend only does transport. Per-request identity arrives as columns —
+``ua``/``bid`` from :func:`with_request_headers` (N8) and ``addr`` from
+``dns.with_addrs`` (N6) — so the request plan stays replayable.
 """
 
 from __future__ import annotations
@@ -44,9 +48,6 @@ class FetchBackend:
     def fetch(self, urls: DataFrame) -> DataFrame:
         raise NotImplementedError
 
-    def describe(self) -> str:
-        return type(self).__name__
-
 
 class CorpusFetchBackend(FetchBackend):
     """Fetch = inner equi-join against a pages corpus (F1).
@@ -55,7 +56,7 @@ class CorpusFetchBackend(FetchBackend):
     honored by Spark unconditionally (AQE never demotes it), so the
     caller — who knows the round's actual popped count — decides.
     run_round passes True only when the slice is at or under
-    CrawlConfig.broadcast_slice_max_rows; a 10^7-row round at the
+    crawl.BROADCAST_SLICE_MAX_ROWS; a 10^7-row round at the
     10^10-URL design point takes the plain equi-join (sort-merge; with
     pages bucketed by url, bucket-local) instead of OOMing the driver.
     Misses (dead links) simply produce no row — the engine derives them
@@ -68,7 +69,7 @@ class CorpusFetchBackend(FetchBackend):
     scan is ~500 TB of IO. A point lookup instead collects the slice's
     url list (bounded: run_round enables this only when the round's
     actual popped count — known from its count job — is at or under
-    CrawlConfig.point_lookup_max_urls; the same explicitly-bounded-
+    crawl.POINT_LOOKUP_MAX_URLS; the same explicitly-bounded-
     observable rule as the monitor and IVF query collects) and pushes it
     into the corpus scan as an ``In(url, ...)`` parquet filter. Against
     the production layout — write_bucketed_pages: url-sorted buckets,
@@ -76,10 +77,10 @@ class CorpusFetchBackend(FetchBackend):
     BUCKETS at planning time and the bloom filters skip row groups
     inside the survivors: the parquet-native index lookup, same
     mechanism as the seen-set fp blooms (measured 2.53x on absent-key
-    lookups over 8M fingerprints in 16 files). The gate must stay SMALL (default 500): pushed-
+    lookups over 8M fingerprints in 16 files). The gate must stay SMALL (500): pushed-
     In evaluation cost grows linearly with the probe count and crosses
     the full-scan join around a few thousand probes (measured numbers
-    in CrawlConfig.point_lookup_max_urls).
+    at crawl.POINT_LOOKUP_MAX_URLS).
     """
 
     def __init__(self, pages: DataFrame, broadcast_slice: bool = True,
@@ -180,9 +181,9 @@ def with_request_headers(slice_df: DataFrame, round_no: int,
     DETERMINISTIC per (url, round): the UA is hash-picked from the pool
     and ``bid`` is derived from a salted hash — the same request gets
     the same identity on replay, different rounds rotate. Both columns
-    are JVM-side expressions (codegen; no Python in the hot path); a
-    fetch backend (HttpFetchBackend) sends them as the User-Agent header
-    and the ``bid`` cookie. Static header constants (sec-ch-*,
+    are JVM-side expressions (codegen; no Python in the hot path); an
+    HTTP fetch backend sends them as the User-Agent header and the
+    ``bid`` cookie. Static header constants (sec-ch-*,
     Sec-Fetch-*) are backend configuration, not per-row data.
     """
     agents = user_agents or DEFAULT_USER_AGENTS
@@ -201,24 +202,3 @@ def with_request_headers(slice_df: DataFrame, round_no: int,
                  F.lower(F.conv(h2.cast("string"), 10, 36))), 1, 11)
     return slice_df.withColumn("ua", ua).withColumn("bid", bid)
 
-
-class HttpFetchBackend(FetchBackend):
-    """Shape of a real HTTP backend (documentation stub — this sandbox has
-    no network). A production implementation would ``mapInPandas`` over
-    url batches, issuing pooled HTTP GETs per Arrow batch and yielding
-    (url, html); failures yield no row so the engine's retry path engages.
-    Proxy rotation (the reference's middleware plane) lives entirely
-    inside this class; per-request identity comes in as COLUMNS — ``ua``
-    and ``bid`` from :func:`with_request_headers` (N8) and ``addr`` from
-    ``dns.with_addrs`` (N6) — so the request plan stays declarative and
-    replayable."""
-
-    def __init__(self, timeout_s: float = 30.0):
-        self.timeout_s = timeout_s
-
-    def fetch(self, urls: DataFrame) -> DataFrame:
-        raise NotImplementedError(
-            "HTTP fetching is not available in this sandbox; use "
-            "CorpusFetchBackend or implement fetch() with a mapInPandas "
-            "HTTP pool as described in the class docstring"
-        )

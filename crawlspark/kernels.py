@@ -173,17 +173,14 @@ def extract_text(html_col: pd.Series) -> pd.Series:
     return html_col.map(html_to_text)
 
 
-def fingerprint_col(url_col: Column, already_canonical: bool = False) -> Column:
-    """K2: SHA1 fingerprint — stays entirely JVM-side/codegen'd.
-
-    ``sha1(encode(canonicalize(url), 'utf-8'))`` — only the
-    canonicalization needs Python; hashing is a Spark builtin. Pass
-    ``already_canonical=True`` when the column has been canonicalized
-    (canonicalization is idempotent; skipping the second Arrow pass
-    halves the Python work on the link-discovery path).
+def fingerprint_col(url_col: Column) -> Column:
+    """K2: SHA1 fingerprint of an ALREADY-CANONICAL url column (every
+    caller canonicalizes once with :func:`canonicalize_urls` first) —
+    ``sha1(encode(url, 'utf-8'))``, a Spark builtin that stays entirely
+    JVM-side/codegen'd, so the Python work is the one canonicalization
+    pass.
     """
-    canon = url_col if already_canonical else canonicalize_urls(url_col)
-    return F.sha1(F.encode(canon, "utf-8"))
+    return F.sha1(F.encode(url_col, "utf-8"))
 
 
 def host_col(url_col: Column) -> Column:
@@ -215,11 +212,11 @@ _EXTRACT_SCHEMA = T.StructType(
 )
 
 
-def extract_records_and_links(df, url_field: str = "url", html_field: str = "html",
-                              include_text: bool = True):
-    """K4: mapInPandas batch extractor — one Arrow pass computes record
-    fields, text, and discovered links for every fetched page.
-    ``include_text=False``: see extract_page (round-path optimization)."""
+def extract_records_and_links(df, include_text: bool = True):
+    """K4: mapInPandas batch extractor over (url, html) rows — one Arrow
+    pass computes record fields, text, and discovered links for every
+    fetched page. ``include_text=False``: see extract_page (round-path
+    optimization)."""
 
     _out_cols = ("url", "kind", "rank", "name", "rate", "num",
                  "genres", "text", "links")
@@ -230,7 +227,7 @@ def extract_records_and_links(df, url_field: str = "url", html_field: str = "htm
             # several times faster than from a list of per-row dicts
             # (measured; this kernel is the crawl round's hot loop)
             cols: dict[str, list] = {c: [] for c in _out_cols}
-            for u, h in zip(pdf[url_field], pdf[html_field]):
+            for u, h in zip(pdf["url"], pdf["html"]):
                 rec = extract_page(u, h if isinstance(h, (bytes, bytearray)) else bytes(h),
                                    include_text=include_text)
                 for c in _out_cols:

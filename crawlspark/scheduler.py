@@ -29,10 +29,37 @@ from pyspark.sql import functions as F
 from .schema import MAX_PARENT_RN, STATUS_DONE, STATUS_QUEUED
 
 
+# Admission constants (CrawlConfig holds only the options callers set).
+# robots default crawl_delay (utils/robots_parser.py:108-109); a missing,
+# zero or negative crawl-delay falls back to it
+DEFAULT_CRAWL_DELAY = 1.0
+# rank<=100 -> priority 1, rank<=200 -> priority 0, else -1
+# (douban2.py:160-166)
+LINK_PRIORITY_T1 = 100
+LINK_PRIORITY_T2 = 200
+# hot-host salting fan-out for the pop window (P1)
+POP_SALTS = 8
+# Broadcast size gate for the robots table (N4), also used for the DNS
+# map in dns.with_addrs. One row per KNOWN host is not provably
+# broadcast-sized at the 10^10-URL design point: 10^7-10^8 hosts x
+# deny-prefix arrays is multi-GB. The runner counts the robots frame ONCE
+# per run (it is static input) and with_robots hints broadcast only when
+# that count is at or under this bound; above it — or when no count was
+# supplied — the join is left un-hinted and AQE picks the strategy from
+# runtime stats (it still broadcasts genuinely small robots tables).
+BROADCAST_ROBOTS_MAX_HOSTS = 1_000_000
+# AUTOTHROTTLE feedback factors (Douban2/settings.py:29-33): budget scale
+# multiplier after a bad round, after a clean round, the miss ratio that
+# counts as "bad", and the floor of the scale
+AT_BACKOFF = 0.5
+AT_RECOVER = 1.5
+AT_MISS_THRESHOLD = 0.2
+AT_MIN_SCALE = 0.05
+
+
 @dataclass
 class CrawlConfig:
     round_wall: float = 60.0       # seconds of wall-clock one round stands for
-    default_delay: float = 1.0     # robots default crawl_delay (utils/robots_parser.py:108-109)
     per_host_cap: int = 30         # 30-per-minute analog (Douban2/middlewares.py:399-409)
     # DELIBERATE DEVIATION from Scrapy's RETRY_TIMES: here max_retries =
     # TOTAL attempts (max_retries=3 -> 1 initial + 2 retries), whereas
@@ -43,8 +70,6 @@ class CrawlConfig:
     max_retries: int = 3           # total attempts (RETRY_TIMES=3 analog, see above)
     max_depth: int = 1             # request_depth_max: 1 (logs/spider_douban1.log:561)
     n_buckets: int = 64
-    priority_t1: int = 100         # rank<=100 -> priority 1 (douban2.py:160-166)
-    priority_t2: int = 200         # rank<=200 -> priority 0, else -1
     max_urls_per_round: int | None = None  # global cap (P2 backpressure analog)
     # Static quota (P5): lifetime cap on DONE urls per host. The
     # reference splits a global CLOSESPIDER_ITEMCOUNT=250 into fixed
@@ -57,47 +82,6 @@ class CrawlConfig:
     # at-scale "cap pages per domain" primitive. None (default) = off,
     # zero extra work in the round.
     host_quota: int | None = None
-    n_salts: int = 8               # hot-host salting fan-out for the pop window (P1)
-    # Broadcast size gate for the per-round slice joins (F1 fetch join +
-    # the done/missed/fetch_log semi-joins): a broadcast HINT is honored
-    # unconditionally by Spark — AQE never demotes it — so a 10^7-row
-    # round slice hinted broadcast is a driver/executor OOM, not a slow
-    # plan. run_round broadcasts only when the round's ACTUAL popped count
-    # (known before the fetch) is at or under this bound; bigger slices
-    # take a plain equi-join on url and AQE/sort-merge handles them.
-    # 1M urls ~ 80 MB serialized — safe for standard 4-8 GB executors.
-    broadcast_slice_max_rows: int = 1_000_000
-    # Broadcast size gate for the robots table (N4). One row per KNOWN
-    # host is not provably broadcast-sized at the 10^10-URL design point:
-    # 10^7-10^8 hosts x deny-prefix arrays is multi-GB. Same policy as the
-    # slice gate: the runner counts the robots frame ONCE per run (it is
-    # static input) and with_robots hints broadcast only when that count
-    # is at or under this bound; above it — or when no count was supplied
-    # — the join is left un-hinted and AQE picks the strategy from runtime
-    # stats (it still broadcasts genuinely small robots tables).
-    broadcast_robots_max_hosts: int = 1_000_000
-    # Tiny-slice point-lookup gate (seed rounds, retry tails): when the
-    # round's actual popped count is at or under this, the default fetch
-    # skips the corpus-scanning join entirely and pushes the url list
-    # into the parquet scan as an In() filter — bucket pruning (at
-    # production bucket counts, e.g. 4096) plus row-group skipping via
-    # url blooms instead of an O(corpus) scan to fetch a handful of
-    # URLs. The driver-side url collect is bounded by this gate. The
-    # default is deliberately small: pushed-In evaluation cost grows
-    # linearly with the probe count (measured on a 500k-page bucketed
-    # corpus, warm cache: In(200) 4.7 s, In(1500) 10.8 s, In(3000)
-    # 18.5 s vs 4.0 s for the scan+broadcast join), so thousands of
-    # probes are better served by the join. 0 disables.
-    point_lookup_max_urls: int = 500
-    # Declared corpus contract for the DEFAULT fetch backend: the pages
-    # table is unique by url (the input_hint's Iceberg pages table is
-    # keyed by url; write_bucketed_pages lays out one row per url). The
-    # engine then skips the defensive one-row-per-url enforcement
-    # shuffle on the fetch output (~1.5 GB of extracted rows per 500k
-    # round). Set False for multi-snapshot corpora (several crawls of
-    # the same url in one table) — the engine dedups instead. Custom
-    # backends carry their own FetchBackend.unique_by_url declaration.
-    corpus_unique_by_url: bool = True
     # Corpus-building mode (north_star: "extracts byte-identical text per
     # url from html"): when True, each round extracts text in the same
     # Arrow kernel pass and persists (url, text, crawl_round) to the
@@ -112,25 +96,10 @@ class CrawlConfig:
     # 1000-round crawl's disk stays O(state), not O(rounds). 0 disables
     # (keeps full time-travel history).
     vacuum_every: int = 16
-    # Reference-parity delay model: the reference does NOT
-    # pace itself by robots crawl-delay (ROBOTSTXT_OBEY=False,
-    # /root/reference/Douban2/settings.py) — its AUTOTHROTTLE
-    # (START_DELAY=3, MAX_DELAY=10, TARGET_CONCURRENCY=2, settings.py:29-33)
-    # oscillates around an observed mean inter-request gap of 3.886 s/node
-    # (log-derived: walls 395.07+394.59+597.52 s over 101+100+156 requests,
-    # logs/spider_douban*.log). When set, the per-host effective delay is
-    # max(robots crawl-delay, this value) — the schedule Scrapy actually
-    # ran. None (default) keeps the pure robots-delay budget; all parity
-    # order/seen-set tests pin that default.
-    parity_effective_delay: float | None = None
     # AUTOTHROTTLE analog (Douban2/settings.py:29-33): feedback on budgets
     # instead of on sleep delays — backoff when fetches fail, recover when
     # clean. Off by default (parity tests pin the static-budget semantics).
     autothrottle: bool = False
-    at_backoff: float = 0.5        # scale multiplier after a bad round
-    at_recover: float = 1.5        # scale multiplier after a clean round
-    at_miss_threshold: float = 0.2  # miss ratio that counts as "bad"
-    at_min_scale: float = 0.05
 
     def __post_init__(self) -> None:
         # the pop position (parent_rn) is bounded by the per-host budget;
@@ -143,17 +112,11 @@ class CrawlConfig:
                 "+ link_idx); use <= 1048575"
             )
 
-    def effective_delay(self, crawl_delay: float | None) -> float:
-        """Per-host inter-request gap the schedule enforces: robots
-        crawl-delay (default when absent), raised to the reference's
-        observed AUTOTHROTTLE gap in parity mode."""
-        d = crawl_delay if crawl_delay and crawl_delay > 0 else self.default_delay
-        if self.parity_effective_delay is not None:
-            d = max(d, self.parity_effective_delay)
-        return d
-
     def host_budget(self, crawl_delay: float | None) -> int:
-        d = self.effective_delay(crawl_delay)
+        """Per-host URLs per round: floor(round_wall / delay) capped at
+        per_host_cap, where a missing or non-positive robots crawl-delay
+        falls back to DEFAULT_CRAWL_DELAY."""
+        d = crawl_delay if crawl_delay and crawl_delay > 0 else DEFAULT_CRAWL_DELAY
         return max(1, min(int(self.round_wall // d), self.per_host_cap))
 
     def next_budget_scale(self, scale: float, popped: int, missed: int) -> float:
@@ -162,10 +125,10 @@ class CrawlConfig:
         if not self.autothrottle or popped <= 0:
             return scale
         miss_ratio = missed / popped
-        if miss_ratio > self.at_miss_threshold:
-            return max(self.at_min_scale, scale * self.at_backoff)
+        if miss_ratio > AT_MISS_THRESHOLD:
+            return max(AT_MIN_SCALE, scale * AT_BACKOFF)
         if missed == 0:
-            return min(1.0, scale * self.at_recover)
+            return min(1.0, scale * AT_RECOVER)
         return scale
 
 
@@ -183,7 +146,7 @@ def with_robots(
     deny-prefix arrays -> multi-GB), and a broadcast HINT is honored
     unconditionally. So the hint is applied only when the caller supplies
     a measured ``robots_count`` at or under
-    ``cfg.broadcast_robots_max_hosts`` (CrawlRunner counts the static
+    ``BROADCAST_ROBOTS_MAX_HOSTS`` (CrawlRunner counts the static
     robots input once per run). With no count, the join is un-hinted and
     AQE chooses from runtime stats — still a broadcast join for small
     robots tables, a shuffle join for web-scale ones.
@@ -193,7 +156,7 @@ def with_robots(
         F.col("deny_prefixes"),
         F.col("crawl_delay"),
     )
-    if robots_count is not None and robots_count <= cfg.broadcast_robots_max_hosts:
+    if robots_count is not None and robots_count <= BROADCAST_ROBOTS_MAX_HOSTS:
         r = F.broadcast(r)
     out = queued.join(r, queued["host"] == r["_rhost"], "left").drop("_rhost")
     path = F.parse_url(F.col("url"), F.lit("PATH"))
@@ -201,11 +164,12 @@ def with_robots(
         F.col("deny_prefixes").isNotNull(),
         F.exists("deny_prefixes", lambda p: path.startswith(p)),
     ).otherwise(F.lit(False))
-    eff_delay = F.coalesce(F.col("crawl_delay"), F.lit(cfg.default_delay))
-    if cfg.parity_effective_delay is not None:
-        # reference-parity: AUTOTHROTTLE's observed gap floors the delay
-        # (see CrawlConfig.parity_effective_delay)
-        eff_delay = F.greatest(eff_delay, F.lit(cfg.parity_effective_delay))
+    # missing, zero or negative crawl-delay -> the default, as in
+    # CrawlConfig.host_budget (a served ``Crawl-delay: 0`` must not divide
+    # round_wall by zero)
+    eff_delay = F.when(F.col("crawl_delay") > 0, F.col("crawl_delay")).otherwise(
+        F.lit(DEFAULT_CRAWL_DELAY)
+    )
     budget = F.greatest(
         F.floor(
             F.least(
@@ -273,18 +237,17 @@ def pop_slice(
     # Two-phase top-k is semantics-preserving: phase 1 takes the top
     # `budget` rows within each (host, salt-of-fp) shard — any row in the
     # host's true top-budget is in *some* shard's top-budget — then phase 2
-    # ranks the <= n_salts*budget survivors per host. The heavy window is
+    # ranks the <= POP_SALTS*budget survivors per host. The heavy window is
     # salt-bounded; the exact window runs on a tiny set.
     order = [F.desc("priority"), F.asc("seq"), F.asc("fp")]
-    if cfg.n_salts > 1:
-        w1 = Window.partitionBy(
-            "host", F.pmod(F.xxhash64("fp"), F.lit(cfg.n_salts))
-        ).orderBy(*order)
-        admissible = (
-            admissible.withColumn("_srn", F.row_number().over(w1))
-            .filter(F.col("_srn") <= F.col("_budget"))
-            .drop("_srn")
-        )
+    w1 = Window.partitionBy(
+        "host", F.pmod(F.xxhash64("fp"), F.lit(POP_SALTS))
+    ).orderBy(*order)
+    admissible = (
+        admissible.withColumn("_srn", F.row_number().over(w1))
+        .filter(F.col("_srn") <= F.col("_budget"))
+        .drop("_srn")
+    )
     w = Window.partitionBy("host").orderBy(*order)
     sliced = (
         admissible.withColumn("_rn", F.row_number().over(w))
@@ -302,7 +265,7 @@ def pop_slice(
     return sliced, denied
 
 
-def link_priority_col(url_col, t1: int = 100, t2: int = 200) -> "F.Column":
+def link_priority_col(url_col) -> "F.Column":
     """Priority of a discovered link, derived from the rank embedded in the
     canonical URL — the reference derives it from list-page rank position
     (/root/reference/Douban2/spiders/douban2.py:160-166: rank<=100 -> 1,
@@ -311,14 +274,14 @@ def link_priority_col(url_col, t1: int = 100, t2: int = 200) -> "F.Column":
     rank_l = F.when(rank == "", F.lit(None)).otherwise(rank).cast("long")
     return (
         F.when(rank_l.isNull(), F.lit(0))
-        .when(rank_l <= t1, F.lit(1))
-        .when(rank_l <= t2, F.lit(0))
+        .when(rank_l <= LINK_PRIORITY_T1, F.lit(1))
+        .when(rank_l <= LINK_PRIORITY_T2, F.lit(0))
         .otherwise(F.lit(-1))
         .cast("int")
     )
 
 
-def link_priority(url: str, t1: int = 100, t2: int = 200) -> int:
+def link_priority(url: str) -> int:
     """Pure-Python twin of :func:`link_priority_col` (simulator parity)."""
     import re
 
@@ -326,7 +289,7 @@ def link_priority(url: str, t1: int = 100, t2: int = 200) -> int:
     if not m:
         return 0
     r = int(m.group(1))
-    return 1 if r <= t1 else (0 if r <= t2 else -1)
+    return 1 if r <= LINK_PRIORITY_T1 else (0 if r <= LINK_PRIORITY_T2 else -1)
 
 
 def revisit_schedule(
@@ -814,7 +777,7 @@ def politeness_ceiling(
     served ``Crawl-delay: 0`` must not divide max_rate by zero (Spark's
     Divide returns NULL there while DuckDB returns inf: a latent engine
     mismatch and a NULL in a planning card), and the clamp matches the
-    admission engine's own CrawlConfig.effective_delay semantics. One
+    admission engine's own CrawlConfig.host_budget semantics. One
     left join + pure column algebra, zero windows. Output: (host, n_queued,
     crawl_delay, max_rate, drain_seconds, is_bottleneck) — flagged
     when a single host alone needs more than ``bottleneck_seconds`` to

@@ -141,7 +141,7 @@ def simulate(
                 seq = (rnd + 1) * S_ROUND + rn * S_PARENT + link_idx
                 cand = {
                     "fp": fp, "url": url, "host": url_host(url),
-                    "priority": link_priority(url, cfg.priority_t1, cfg.priority_t2),
+                    "priority": link_priority(url),
                     "depth": depth, "seq": seq, "status": "queued", "retry": 0,
                 }
                 old = discovered.get(fp)

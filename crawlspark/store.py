@@ -118,35 +118,19 @@ class SnapshotStore:
 
     # -- data ops -------------------------------------------------------------
 
-    def append(
-        self, df: DataFrame, round_no: int, meta: dict | None = None,
-        rows: int | None = None,
-    ) -> int:
+    def append(self, df: DataFrame, round_no: int, meta: dict | None = None) -> int:
         """Append a delta file-set and commit a new snapshot (old files kept).
-
-        ``rows`` lets the caller pass an already-known count for lineage;
-        otherwise a (metadata-only) parquet count runs — cheap, but one
-        extra job per commit.
-
-        Small appends are coalesced to a few files: without this, every
-        delta writes shuffle.partitions files, and each subsequent round
-        re-lists and re-reads them all — the classic small-file problem,
-        here an actual anti-scaling term (more cores -> more files ->
-        slower rounds)."""
+        The lineage row count is a (metadata-only) parquet count of the
+        written files — one extra job per commit. The crawl round never
+        pays it: its tee write commits through commit_external with counts
+        from the write's own Observation."""
         rel = f"data/{uuid.uuid4().hex}"
         full = f"{self.path}/{rel}"
-        if rows is not None:
-            # repartition (a real exchange), NOT coalesce: coalesce(k)
-            # collapses the upstream DAG onto k tasks, serializing the
-            # whole compute; an exchange keeps upstream wide and only the
-            # tiny write narrow.
-            df = df.repartition(max(1, min(32, rows // 250_000 + 1)))
         w = df.write.mode("overwrite")
         if "fp" in df.columns:  # D1: bloom-filter the fingerprint column
             w = w.option("parquet.bloom.filter.enabled#fp", "true")
         w.parquet(full)
-        if rows is None:
-            rows = self.spark.read.parquet(full).count()
+        rows = self.spark.read.parquet(full).count()
         prev = self.manifest()
         files = (prev["files"] if prev else []) + [{"path": rel, "rows": rows}]
         return self._commit(files, round_no, meta)
@@ -423,11 +407,8 @@ class FrontierStore:
         )
         return resolved.select("fp", *[F.col(f"_row.{c}").alias(c) for c in others])
 
-    def merge_frontier(
-        self, rows: DataFrame, round_no: int, meta: dict | None = None,
-        n_rows: int | None = None,
-    ) -> int:
-        sid = self.frontier.append(rows, round_no, meta, rows=n_rows)
+    def merge_frontier(self, rows: DataFrame, round_no: int, meta: dict | None = None) -> int:
+        sid = self.frontier.append(rows, round_no, meta)
         self._maybe_compact(self.frontier, self.frontier_state, round_no)
         return sid
 
@@ -436,10 +417,10 @@ class FrontierStore:
     def seen_state(self, snapshot_id: int | None = None) -> DataFrame | None:
         return self.seen.read(snapshot_id)
 
-    def merge_seen(self, rows: DataFrame, round_no: int, n_rows: int | None = None) -> int:
+    def merge_seen(self, rows: DataFrame, round_no: int) -> int:
         """Insert-if-absent. Caller anti-joins first; we still drop in-batch
         dupes (D3 analog) so the table is unique by fp."""
-        return self.seen.append(rows.dropDuplicates(["fp"]), round_no, rows=n_rows)
+        return self.seen.append(rows.dropDuplicates(["fp"]), round_no)
 
     # -- results ---------------------------------------------------------------
 
@@ -454,16 +435,13 @@ class FrontierStore:
             .drop("_rn")
         )
 
-    def upsert_results(self, rows: DataFrame, round_no: int, n_rows: int | None = None) -> int:
-        return self.results.append(rows, round_no, rows=n_rows)
+    def upsert_results(self, rows: DataFrame, round_no: int) -> int:
+        return self.results.append(rows, round_no)
 
     # -- metrics ----------------------------------------------------------------
 
-    def append_metrics(self, rows: DataFrame, round_no: int, n_rows: int | None = None) -> int:
-        return self.metrics.append(rows, round_no, rows=n_rows)
-
-    def append_fetch_log(self, rows: DataFrame, round_no: int, n_rows: int | None = None) -> int:
-        return self.fetch_log.append(rows, round_no, rows=n_rows)
+    def append_metrics(self, rows: DataFrame, round_no: int) -> int:
+        return self.metrics.append(rows, round_no)
 
     def fetch_log_state(self) -> DataFrame | None:
         return self.fetch_log.read()

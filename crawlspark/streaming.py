@@ -2,8 +2,9 @@
 
 The reference's crawl loop is batch rounds, not a stream (SURVEY §2.7
 "not present" list) — but its *monitoring* plane is continuous (Redis
-stats hashes polled by utils/monitor.py, heartbeats every 5-10 s,
-/root/reference/scripts/run_crawler.py:99-134). Here that becomes real
+stats hashes polled by utils/monitor.py, heartbeats every 5-10 s, the
+reference's scripts/run_crawler.py:99-134). The crawl itself stays
+batch rounds (``CrawlRunner.run``); the streams around it are real
 Structured Streaming:
 
 * ``stream_metrics``      — readStream over the metrics/fetch-log parquet
@@ -11,7 +12,11 @@ Structured Streaming:
 * ``windowed_event_agg``  — watermarked tumbling-window aggregation over an
   events stream (late data handled by the watermark), the canonical
   streaming shape a production crawl dashboard uses;
-* ``stream_seen_growth``  — running seen-set growth counter.
+* ``stream_url_ingest``   — continuous URL ingest into the frontier of a
+  live crawl;
+* ``stream_corpus_dedup`` / ``stream_neardup_dedup`` /
+  ``stream_quality_funnel`` / ``stream_wet_publisher`` — the continuous
+  corpus plane over the crawl's emit_text output.
 
 Tests drive these with ``trigger(availableNow=True)`` so they run
 deterministically without a long-lived query.
@@ -246,86 +251,6 @@ def stream_url_ingest(
         .trigger(availableNow=True)
         .start()
     )
-
-
-def stream_crawl_rounds(
-    spark: SparkSession,
-    root: str,
-    pages: DataFrame,
-    robots: DataFrame,
-    cfg=None,
-    checkpoint: str | None = None,
-    max_rounds: int = 1000,
-    backend=None,
-) -> dict:
-    """Streaming crawl mode (SURVEY §3.1's round loop as triggers): the
-    frontier's OWN COMMIT LOG is the stream. Every committed round lands
-    new parquet files under ``{root}/shared/*/_table=frontier``; a file
-    stream over that glob emits one micro-batch per committed round, and
-    the ``foreachBatch`` handler runs the NEXT scheduler round — which
-    writes the files that trigger the following batch. Self-feeding:
-
-        seed files -> batch 0 -> run_round(0) -> round-0 files
-                   -> batch 1 -> run_round(1) -> ...
-
-    Each ``availableNow`` pass processes exactly one round; the loop stops
-    when a pass pops nothing (drain) or fires no batch (no new commits).
-    The streaming checkpoint gives exactly-once file accounting, so a
-    killed streaming crawl RESUMES from the same checkpoint dir: already-
-    processed commits never re-fire, and the store's own resume contract
-    (rollback siblings, continue at last+1) supplies the state — an e2e
-    test pins byte-parity with the batch runner.
-
-    Returns {"rounds": n, "counts": [...]} like CrawlRunner.run.
-    """
-    from .crawl import _TEE_TYPES, run_round
-    from .runner import CrawlRunner
-    from .scheduler import CrawlConfig
-
-    cfg = cfg or CrawlConfig()
-    checkpoint = checkpoint or f"{root}/stream_checkpoint"
-    runner = CrawlRunner(spark, root, cfg)  # reuse rollback/resume logic
-    store = runner.store
-    tee_ddl = ", ".join(f"{c} {t}" for c, t in _TEE_TYPES.items())
-
-    counts: list[dict] = []
-    budget_scale = 1.0
-    # static robots input counted once for the whole stream — same
-    # broadcast size gate as the batch runner
-    robots_count = robots.count()
-    for _ in range(max_rounds):
-        next_round = runner.resume_round()
-        fired = {"popped": None}
-
-        def _on_batch(batch_df, batch_id, _r=next_round, _bs=budget_scale):  # noqa: ANN001
-            # the batch content is the trigger; the round re-reads the
-            # store's committed state (batch_df rows = that state's log).
-            # queued_before comes from the previous commit's manifest hint
-            # (seed and every round persist queued_after) — same arithmetic
-            # tracking as the batch runner, zero extra jobs.
-            c = run_round(spark, store, pages, robots, cfg, _r,
-                          budget_scale=_bs, backend=backend,
-                          queued_before=store.queued_after_hint(),
-                          robots_count=robots_count)
-            fired["popped"] = c
-
-        q = (
-            spark.readStream.schema(tee_ddl)
-            .parquet(f"{root}/shared/*/_table=frontier")
-            .writeStream.foreachBatch(_on_batch)
-            .option("checkpointLocation", checkpoint)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-        c = fired["popped"]
-        if c is None or c.get("popped", 0) == 0:
-            break  # no new commits to process, or frontier drained
-        counts.append(c)
-        budget_scale = cfg.next_budget_scale(
-            budget_scale, c.get("popped", 0), c.get("missed", 0)
-        )
-    return {"rounds": len(counts), "counts": counts}
 
 
 def stream_corpus_dedup(

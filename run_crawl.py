@@ -73,10 +73,6 @@ def main() -> int:
     ap.add_argument("--warc", help="directory of .warc/.warc.gz segments to "
                                    "use as the pages corpus (Common Crawl "
                                    "layout) instead of --pages")
-    ap.add_argument("--streaming", action="store_true",
-                    help="streaming crawl mode: the frontier commit log is "
-                         "the stream; one availableNow micro-batch per round "
-                         "(checkpointed, kill-resumable)")
     args = ap.parse_args()
 
     import os
@@ -175,22 +171,12 @@ def main() -> int:
     already_seeded = runner.store.last_committed_round() is not None
     if not already_seeded:
         runner.init(seeds)
-    if args.streaming:
-        from crawlspark.streaming import stream_crawl_rounds
-
-        sres = stream_crawl_rounds(spark, args.store, pages, robots, cfg,
-                                   max_rounds=args.max_rounds)
-        rounds, counts = sres["rounds"], sres["counts"]
-        fetched = sum(c.get("fetched", 0) for c in counts)
-    else:
-        res = runner.run(pages, robots, max_rounds=args.max_rounds)
-        rounds, counts, fetched = res.rounds, res.counts, res.total_fetched
+    res = runner.run(pages, robots, max_rounds=args.max_rounds)
     print(json.dumps({
-        "rounds": rounds,
-        "fetched": fetched,
+        "rounds": res.rounds,
+        "fetched": res.total_fetched,
         "resumed": already_seeded,
-        "streaming": bool(args.streaming),
-        "per_round": counts,
+        "per_round": res.counts,
     }))
     return 0
 

@@ -147,12 +147,12 @@ def test_autothrottle_backoff(spark, tmp_path):
 
 def test_robots_broadcast_gate_plan_shapes(spark, golden_site):
     """N4 at-scale gate (judge r4 #2): the robots join is broadcast-HINTED
-    only when the measured host count fits cfg.broadcast_robots_max_hosts;
+    only when the measured host count fits BROADCAST_ROBOTS_MAX_HOSTS;
     above the gate (a 10^7-host web-scale robots table) the plan must fall
     back to a non-broadcast equi-join — a hint would be honored regardless
     of size and OOM the driver. Verdicts must be identical on both paths."""
     from crawlspark.schema import STATUS_QUEUED
-    from crawlspark.scheduler import with_robots
+    from crawlspark.scheduler import BROADCAST_ROBOTS_MAX_HOSTS, with_robots
 
     robots = spark.createDataFrame(golden_site["robots"], schema=ROBOTS)
     n_hosts = robots.count()
@@ -168,21 +168,41 @@ def test_robots_broadcast_gate_plan_shapes(spark, golden_site):
     # forbid AUTO broadcast so the plan shape shows the HINT decision alone
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     try:
-        small = CrawlConfig(broadcast_robots_max_hosts=n_hosts)
-        big = CrawlConfig(broadcast_robots_max_hosts=n_hosts - 1)
-        p_small = with_robots(queued, robots, small, robots_count=n_hosts) \
-            ._jdf.queryExecution().executedPlan().toString()
-        p_big = with_robots(queued, robots, big, robots_count=n_hosts) \
-            ._jdf.queryExecution().executedPlan().toString()
-        p_unknown = with_robots(queued, robots, big) \
-            ._jdf.queryExecution().executedPlan().toString()
-        assert "BroadcastHashJoin" in p_small
-        assert "BroadcastHashJoin" not in p_big  # SMJ / shuffled hash
-        assert "BroadcastHashJoin" not in p_unknown  # no count -> no hint
-        rows = lambda cfg, n: sorted(  # noqa: E731
+        # a count above the gate stands in for a web-scale robots table
+        big_count = BROADCAST_ROBOTS_MAX_HOSTS + 1
+        plan = lambda n: with_robots(  # noqa: E731
+            queued, robots, CFG, robots_count=n
+        )._jdf.queryExecution().executedPlan().toString()
+        assert "BroadcastHashJoin" in plan(n_hosts)
+        assert "BroadcastHashJoin" not in plan(big_count)  # SMJ / shuffled hash
+        assert "BroadcastHashJoin" not in plan(None)  # no count -> no hint
+        rows = lambda n: sorted(  # noqa: E731
             (r["url"], bool(r["_denied"]))
-            for r in with_robots(queued, robots, cfg, robots_count=n).collect()
+            for r in with_robots(queued, robots, CFG, robots_count=n).collect()
         )
-        assert rows(small, n_hosts) == rows(big, n_hosts) == rows(big, None)
+        assert rows(n_hosts) == rows(big_count) == rows(None)
     finally:
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
+
+
+def test_nonpositive_crawl_delay_gets_default_budget(spark):
+    """``Crawl-delay: 0`` (robots.parse_robots_txt returns 0.0) and a
+    negative delay must admit the default-delay budget, exactly as
+    CrawlConfig.host_budget computes it — not divide round_wall by zero
+    (DIVIDE_BY_ZERO under ANSI mode) or floor a negative quotient to 1."""
+    from crawlspark.schema import STATUS_QUEUED
+    from crawlspark.scheduler import with_robots
+
+    delays = {"zero.example.com": 0.0, "neg.example.com": -2.0,
+              "slow.example.com": 3.0, "absent.example.com": None}
+    robots = spark.createDataFrame(
+        [(h, [], d) for h, d in delays.items()], schema=ROBOTS
+    )
+    queued = spark.createDataFrame(
+        [(f"https://{h}/a", h, STATUS_QUEUED) for h in delays],
+        "url string, host string, status string",
+    )
+    got = {r["host"]: r["_budget"]
+           for r in with_robots(queued, robots, CFG, robots_count=4).collect()}
+    assert got == {h: CFG.host_budget(d) for h, d in delays.items()}
+    assert got["zero.example.com"] == got["neg.example.com"] == 20

@@ -1,13 +1,12 @@
 """FetchBackend seam (N7) + monitor rendering (reference utils/monitor.py
 analog): the engine must run unchanged through an explicitly-supplied
-backend, refuse politely on the HTTP stub, and render per-round progress
-from the metrics table."""
+backend and render per-round progress from the metrics table."""
 
 from __future__ import annotations
 
 import pytest
 
-from crawlspark.fetch import CorpusFetchBackend, FetchBackend, HttpFetchBackend
+from crawlspark.fetch import CorpusFetchBackend, FetchBackend
 from crawlspark.monitor import progress_frame, render_progress
 from crawlspark.runner import CrawlRunner
 from crawlspark.scheduler import CrawlConfig
@@ -74,12 +73,6 @@ def test_crawl_through_explicit_backend(spark, site, tmp_path):
     # totals line agrees with the runner's own counts
     total_fetched = sum(c.get("fetched", 0) for c in res.counts)
     assert f"{total_fetched:>9}" in text.splitlines()[-2]
-
-
-def test_http_backend_is_an_honest_stub(spark, site):
-    with pytest.raises(NotImplementedError):
-        HttpFetchBackend().fetch(site["pages"].select("url"))
-    assert HttpFetchBackend().describe() == "HttpFetchBackend"
 
 
 def test_custom_backend_drives_misses(spark, site, tmp_path):
@@ -154,18 +147,19 @@ def test_corpus_backend_broadcast_gate_plan_shapes(spark, site):
 
 
 @pytest.mark.slow
-def test_big_slice_path_crawls_identically(spark, site, tmp_path):
+def test_big_slice_path_crawls_identically(spark, site, tmp_path, monkeypatch):
     """Forcing every round down the non-broadcast (sort-merge) path must
     produce byte-identical crawl results + order — the gate changes the
     physical plan only."""
+    from crawlspark import crawl as crawl_mod
+
     cfg = CrawlConfig(round_wall=1e9, per_host_cap=1000, max_depth=1)
     ref = CrawlRunner(spark, str(tmp_path / "ref2"), cfg)
     ref.init(site["seeds"])
     ref.run(site["pages"], site["robots"])
 
-    cfg_nb = CrawlConfig(round_wall=1e9, per_host_cap=1000, max_depth=1,
-                         broadcast_slice_max_rows=0)
-    nb = CrawlRunner(spark, str(tmp_path / "nb"), cfg_nb)
+    monkeypatch.setattr(crawl_mod, "BROADCAST_SLICE_MAX_ROWS", 0)
+    nb = CrawlRunner(spark, str(tmp_path / "nb"), cfg)
     nb.init(site["seeds"])
     nb.run(site["pages"], site["robots"])
 
@@ -253,20 +247,19 @@ def test_point_lookup_pushes_in_filter_and_matches_join(spark, site, tmp_path):
 
 
 def test_point_lookup_rounds_crawl_identically(spark, site, tmp_path):
-    """Forcing every round down the point-lookup path (gate above any
-    round's popped count) must produce the identical crawl — order, seen
-    set, per-round counts — as the join path (gate 0 = disabled)."""
-    cfg_pl = CrawlConfig(round_wall=1e9, per_host_cap=1000, max_depth=1,
-                         point_lookup_max_urls=10**6)
-    pl = CrawlRunner(spark, str(tmp_path / "pl"), cfg_pl)
+    """Forcing every round down the point-lookup path must produce the
+    identical crawl — order, seen set, per-round counts — as forcing every
+    round down the broadcast join path."""
+    cfg = CrawlConfig(round_wall=1e9, per_host_cap=1000, max_depth=1)
+    pl = CrawlRunner(spark, str(tmp_path / "pl"), cfg)
     pl.init(site["seeds"])
-    pl_res = pl.run(site["pages"], site["robots"])
+    pl_res = pl.run(site["pages"], site["robots"],
+                    backend=CorpusFetchBackend(site["pages"], point_lookup=True))
 
-    cfg_j = CrawlConfig(round_wall=1e9, per_host_cap=1000, max_depth=1,
-                        point_lookup_max_urls=0)
-    jn = CrawlRunner(spark, str(tmp_path / "jn"), cfg_j)
+    jn = CrawlRunner(spark, str(tmp_path / "jn"), cfg)
     jn.init(site["seeds"])
-    jn_res = jn.run(site["pages"], site["robots"])
+    jn_res = jn.run(site["pages"], site["robots"],
+                    backend=CorpusFetchBackend(site["pages"]))
 
     assert pl_res.counts == jn_res.counts
     assert pl.fetch_sequence() == jn.fetch_sequence()
@@ -275,20 +268,22 @@ def test_point_lookup_rounds_crawl_identically(spark, site, tmp_path):
 
 def test_duplicate_corpus_with_uniqueness_disabled_dedups(spark, site, tmp_path):
     """A multi-snapshot corpus (same url twice, e.g. two crawls unioned)
-    with corpus_unique_by_url=False must crawl with the same counts and
-    order as the clean corpus — the engine's enforcement dedup eats the
-    duplicates. The declared-unique default skips that shuffle, which is
-    only sound when the corpus really is url-keyed."""
+    fetched through a CorpusFetchBackend with pages_unique_by_url=False
+    must crawl with the same counts and order as the clean corpus — the
+    engine's enforcement dedup eats the duplicates. The declared-unique
+    default skips that shuffle, which is only sound when the corpus really
+    is url-keyed."""
     dup_pages = site["pages"].unionByName(site["pages"])
 
-    cfg = CrawlConfig(round_wall=1e9, per_host_cap=1000, max_depth=1,
-                      corpus_unique_by_url=False)
+    cfg = CrawlConfig(round_wall=1e9, per_host_cap=1000, max_depth=1)
     dd = CrawlRunner(spark, str(tmp_path / "dd"), cfg)
     dd.init(site["seeds"])
-    dd_res = dd.run(dup_pages, site["robots"])
+    # point lookup: the path the default backend takes for rounds this small
+    dd_res = dd.run(dup_pages, site["robots"],
+                    backend=CorpusFetchBackend(dup_pages, point_lookup=True,
+                                               pages_unique_by_url=False))
 
-    ref = CrawlRunner(spark, str(tmp_path / "refu"),
-                      CrawlConfig(round_wall=1e9, per_host_cap=1000, max_depth=1))
+    ref = CrawlRunner(spark, str(tmp_path / "refu"), cfg)
     ref.init(site["seeds"])
     ref_res = ref.run(site["pages"], site["robots"])
 

@@ -77,7 +77,9 @@ def test_spark_canonicalize_and_fp_match_pure(spark):
     df = spark.createDataFrame([(u,) for u in urls], ["url"])
     rows = df.select(
         canonicalize_urls("url").alias("canon"),
-        fingerprint_col(F.col("url")).alias("fp"),
+        # fingerprint_col takes the canonical column, as every engine
+        # caller passes it
+        fingerprint_col(canonicalize_urls("url")).alias("fp"),
         host_col(F.col("url")).alias("host"),
     ).collect()
     for u, r in zip(urls, rows):

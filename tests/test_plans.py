@@ -92,7 +92,7 @@ def test_no_row_at_a_time_python_in_any_gate_query(spark):
 
 def test_fetch_join_sort_merges_when_gate_is_off(spark):
     """The crawl round's F1 join must not carry a broadcast hint when the
-    popped slice exceeds the gate (see scheduler.broadcast_slice_max_rows);
+    popped slice exceeds the gate (see crawl.BROADCAST_SLICE_MAX_ROWS);
     with auto-broadcast off the plan must contain no broadcast join."""
     from crawlspark.fetch import CorpusFetchBackend
     from crawlspark.schema import PAGES

@@ -168,7 +168,7 @@ def test_long_crawl_bounded_storage_and_flat_reads(spark, tmp_path):
     seeds = spark.createDataFrame(site["seeds"], schema=SEEDS)
     robots = spark.createDataFrame(site["robots"], schema=ROBOTS)
 
-    cfg = CrawlConfig(round_wall=1.0, default_delay=1.0, per_host_cap=1,
+    cfg = CrawlConfig(round_wall=1.0, per_host_cap=1,
                       max_depth=1, vacuum_every=10)
     root = str(tmp_path / "long")
     runner = CrawlRunner(spark, root, cfg)
