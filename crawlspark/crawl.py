@@ -48,7 +48,7 @@ from .schema import (
 )
 from .registry import heartbeat_metrics
 from .scheduler import CrawlConfig, link_priority_col, pop_slice
-from .store import FrontierStore
+from .store import TEE_SCHEMA, FrontierStore
 
 _FRONTIER_COLS = [f.name for f in FRONTIER.fields]
 
@@ -74,35 +74,22 @@ BROADCAST_SLICE_MAX_ROWS = 1_000_000
 # the join.
 POINT_LOOKUP_MAX_URLS = 500
 
-# Unified "round delta" schema: the single per-round write carries every
-# output table's rows, tagged by _table; each SnapshotStore prunes back to
-# its declared columns at read (parquet is columnar — nulls in the unused
-# columns cost ~nothing on disk or at scan).
-_TEE_TYPES: dict[str, str] = {
-    # frontier / seen
-    "fp": "string", "url": "string", "host": "string", "host_bucket": "int",
-    "priority": "int", "depth": "int", "seq": "long", "status": "string",
-    "retry_count": "int", "discovered_round": "int", "op_seq": "long",
-    "first_round": "int",
-    # results
-    "rank": "long", "name": "string", "rate": "double", "num": "long",
-    "genres": "array<string>", "crawl_round": "int",
-    # fetch_log
-    "round": "int", "rn": "int",
-    # corpus (emit_text mode): extracted text per fetched url — null for
-    # every other table's rows; parquet is columnar so the pad is free
-    "text": "string",
-}
+
+def _tee_row(table: str, cols: dict) -> "F.Column":
+    """One tee row of ``table`` as a struct in the ``TEE_SCHEMA`` layout:
+    the given columns cast to their tee types, every other column null.
+    A source row's tee rows are built side by side as
+    ``inline(array(row, ...))`` — one pass, instead of a union of branches
+    that each recompute the source."""
+    return F.struct(F.lit(table).alias("_table"), *[
+        (cols[f.name] if f.name in cols else F.lit(None)).cast(f.dataType).alias(f.name)
+        for f in TEE_SCHEMA.fields
+    ])
 
 
-def _pad(df: DataFrame, table: str) -> DataFrame:
-    """Project a table's rows onto the unified tee schema."""
-    present = set(df.columns)
-    cols = [
-        (F.col(c).cast(t) if c in present else F.lit(None).cast(t)).alias(c)
-        for c, t in _TEE_TYPES.items()
-    ]
-    return df.select(F.lit(table).alias("_table"), *cols)
+def _cols(*names: str, **exprs) -> dict:
+    """Tee-row columns: ``names`` taken as they are, ``exprs`` computed."""
+    return {**{c: F.col(c) for c in names}, **exprs}
 
 
 def _count_where(cond):
@@ -112,7 +99,9 @@ def _count_where(cond):
 def _write_tee(store: FrontierStore, tee: DataFrame) -> tuple[str, bool]:
     """The round's ONE table write: rebalance + partitionBy(_table)
     parquet write; per-table counts are collected by the Observation the
-    caller attached — no separate count jobs, no collect()s.
+    caller attached — no separate count jobs, no collect()s. On the traced
+    ``crawl_polite`` benchmark (seed 7) it runs 5 Spark jobs for a round's
+    tee and 3 for the seed tee (AQE stages of one write).
 
     REBALANCE hint (not a bare repartition): AQE right-sizes the
     write toward the 64m advisory AND splits skewed partitions
@@ -170,14 +159,14 @@ def _tee_new_urls(
         .withColumn("op_seq", F.lit(1).cast("long"))
     )
     w = Window.partitionBy("fp").orderBy(F.asc("seq"))
-    rows = rows.withColumn("_rn", F.row_number().over(w)).filter(F.col("_rn") == 1).drop("_rn")
-    rows = rows.select(*_FRONTIER_COLS)
+    rows = rows.withColumn("_rn", F.row_number().over(w)).filter(F.col("_rn") == 1)
     if seen is not None:
         rows = rows.join(seen.select("fp"), "fp", "left_anti")
-    seen_rows = rows.select(
-        "fp", "url", "host_bucket", F.lit(discovered_round).alias("first_round")
-    )
-    tee = _pad(rows, "frontier").unionByName(_pad(seen_rows, "seen"))
+    tee = rows.select(F.inline(F.array(
+        _tee_row("frontier", _cols(*_FRONTIER_COLS)),
+        _tee_row("seen", _cols("fp", "url", "host_bucket",
+                               first_round=F.lit(discovered_round))),
+    )))
     obs = Observation()
     tee = tee.observe(
         obs,
@@ -193,7 +182,7 @@ def _tee_new_urls(
 
 def seed_frontier(spark: SparkSession, store: FrontierStore, seeds: DataFrame, cfg: CrawlConfig) -> int:
     """Round-0 seed injection (Q3/Q10): canonicalize, fingerprint, bucket,
-    insert into frontier + seen — one tee write (4 Spark jobs on the
+    insert into frontier + seen — one tee write (3 Spark jobs on the
     traced ``crawl_polite`` benchmark, seed 7). Idempotent re-init = a new
     snapshot chain (mirror of the reference deleting old Redis keys in
     its scripts/run_crawler.py)."""
@@ -427,14 +416,18 @@ def run_round(
     partitioned by ``_table``, with every count the round commits
     collected by an attached Observation during that same write; writing
     each table separately would add a driver-serial action per table.
-    Metrics rows are a few KB — written driver-side via pyarrow, zero
-    jobs. Before the tee write, three actions materialize the cached pop
-    slice + robots denials (one count), the fetched+extracted set and the
-    discovered rows; AQE stages and broadcast sub-jobs fan each action
-    out into several Spark jobs. Measured on the traced ``crawl_polite``
-    benchmark (480 URLs, seed 7): 34 Spark jobs per round — 27 up to the
-    commit, 7 in ``commit_round``, 6 of those for the compaction that
-    fires there.
+    The tee has four branches, each emitting a source row's tee rows in
+    one pass: the slice joined once to the fetched set (a mark per row,
+    plus a fetch_log row per hit), the robots denials, the discovered
+    rows (frontier + seen) and the results. Metrics rows are a few KB —
+    written driver-side via pyarrow, zero jobs. Before the tee write, two
+    actions materialize the cached pop slice + robots denials (one count)
+    and the fetched+extracted set (the emit_text corpus write, or a
+    count); AQE stages and broadcast sub-jobs fan each action out into
+    several Spark jobs. Measured on the traced ``crawl_polite`` benchmark
+    (480 URLs, seed 7): 21 Spark jobs per round — 13 before the tee
+    write, 5 for it, and 3 in ``commit_round``, all for the compaction
+    that fires there.
 
     Commit order matters: seen/results/fetch_log/metrics manifests first,
     frontier LAST — the frontier snapshot is the round's atomic commit
@@ -448,15 +441,12 @@ def run_round(
     state = state.cache()
     sliced, denied = pop_slice(state, robots, cfg, budget_scale,
                                robots_count=robots_count)
-    # caching makes each branch compute once inside the tee job: union
-    # branches that share a cached subtree block on the BlockManager's
-    # per-partition load lock instead of recomputing it. The caches are
-    # WARMED by the two count jobs below — letting the tee job race 6 cold
-    # branches (each triggering broadcast sub-jobs over the cold subtrees)
-    # measured 3-5x slower than materializing in dependency order.
+    # cached: the early-exit count below materializes the pop once, and
+    # the tee's mark branches then read it warm instead of re-running the
+    # pop windows (and their broadcast sub-jobs) inside the tee job.
     sliced = sliced.cache()
     denied = denied.cache()
-    # action 1 of 4: early-exit counts (one action for both branches)
+    # early-exit counts (one action for both branches)
     pd_counts = dict(
         sliced.select(F.lit("p").alias("_t"))
         .unionByName(denied.select(F.lit("d").alias("_t")))
@@ -471,7 +461,7 @@ def run_round(
         return {"popped": 0}
 
     # F1 fetch, behind the FetchBackend seam (N7). Broadcast gating: the
-    # popped count is already known (action 1), so the slice joins broadcast
+    # popped count is already known, so the slice joins broadcast
     # only when the round is provably small (BROADCAST_SLICE_MAX_ROWS);
     # a 10^7-row round at the 10^10-URL design point instead takes plain
     # equi-joins on url (sort-merge / AQE — pages bucketed by url make it
@@ -528,14 +518,13 @@ def run_round(
     if not backend.unique_by_url:
         ext = ext.dropDuplicates(["url"])
     ext = ext.join(_bcast(slice_ctx), "url", "inner")
-    corpus_dir = None
+    corpus_dir = corpus_schema = None
     if emit_text:
-        # action 2 of 4, emit_text shape: the materializing action IS the
-        # corpus write. Caching ext WITH text (at ~50 KB/page the block
-        # manager materializes the round's whole text mass in executor
-        # heaps — GC/spill pressure, measured as the largest steady-round
-        # term) would then SERIALIZE the same text a second time through
-        # the tee. Instead the round's
+        # emit_text: the materializing action IS the corpus write. Caching
+        # ext WITH text (at ~50 KB/page the block manager materializes the
+        # round's whole text mass in executor heaps — GC/spill pressure,
+        # measured as the largest steady-round term) would then SERIALIZE
+        # the same text a second time through the tee. Instead the round's
         # fetch-join + extract pipeline streams straight into snappy
         # parquet ONCE — a wide file (text + extraction fields + slice
         # ctx) committed to the `corpus` table, whose declared columns
@@ -544,25 +533,27 @@ def run_round(
         # re-read the staging files COLUMN-PRUNED: the text bytes are
         # never scanned again, and nothing re-runs the kernel.
         corpus_dir = store.shared_write_dir()
+        staged = ext.withColumn("crawl_round", F.lit(round_no))
+        corpus_schema = staged.schema
+        obs = Observation()
         (
-            ext.withColumn("crawl_round", F.lit(round_no))
+            # ext rows == fetched URLs (ext is url-unique, see above): the
+            # write's observed row count IS n_fetched
+            staged.observe(obs, F.count(F.lit(1)).alias("n"))
             # url blooms: the corpus table doubles as a fetch/point-lookup
             # target (same contract as write_bucketed_pages)
             .write.option("parquet.bloom.filter.enabled#url", "true")
             .mode("overwrite")
             .parquet(corpus_dir)
         )
-        ext = spark.read.parquet(corpus_dir).drop("crawl_round")
-        # parquet metadata count (row-group stats, no column IO): ext rows
-        # == fetched URLs (pages unique by url) — this count IS n_fetched
-        n_fetched = ext.count()
+        n_fetched = int(obs.get["n"])
+        ext = spark.read.schema(corpus_schema).parquet(corpus_dir).drop("crawl_round")
     else:
         ext = ext.cache()
-        # action 2 of 4: materialize the extract kernel ONCE (pages are
-        # unique by url, so ext rows == fetched URLs — this count IS
-        # n_fetched) so the tee job's many branches read a warm cache
-        # instead of racing the whole fetch+parse pipeline behind their
-        # broadcast sub-jobs
+        # materialize the extract kernel ONCE (ext rows == fetched URLs —
+        # this count IS n_fetched) so the tee job's branches read a warm
+        # cache instead of racing the whole fetch+parse pipeline behind
+        # their broadcast sub-jobs
         n_fetched = ext.count()
 
     # F5/F6 validate + cast; S1 upsert-by-rank
@@ -629,70 +620,56 @@ def run_round(
     links = links.withColumn("_r", F.row_number().over(w_fp)).filter(F.col("_r") == 1).drop("_r")
 
     seen = store.seen_state()
-    new_rows = links.select(*_FRONTIER_COLS)
+    new_rows = links
     if seen is not None:
         new_rows = new_rows.join(seen.select("fp"), "fp", "left_anti")
-    # action 3 of 4: the discovered rows, warm for the tee's branches
-    new_rows = new_rows.cache()
-    n_new = new_rows.count()
 
+    # ---- the round's tee: one write, four branches ----
     # status marks (op_seq = round*4+2 always beats the insert op_seq of any
-    # earlier round, see store.py docstring)
+    # earlier round, see store.py docstring). Each slice row joins the
+    # fetched set once (ext is url-unique) and emits its mark — DONE on a
+    # hit; on a miss (P4/N9) a requeue at max priority with retry_count+1,
+    # or EXHAUSTED after max_retries (RETRY_TIMES=3 analog) — plus its
+    # fetch_log row on a hit.
     mark_op = F.lit(round_no * 4 + 2).cast("long")
-    fetched_urls = ext.select("url").distinct()
-    done = (
-        sliced.join(_bcast(fetched_urls), "url", "left_semi")
-        .withColumn("status", F.lit(STATUS_DONE))
-        .withColumn("op_seq", mark_op)
-    )
-    missed = sliced.join(_bcast(fetched_urls), "url", "left_anti")
-    # P4/N9: failed fetch -> requeue at max priority with retry_count+1,
-    # give up after max_retries (RETRY_TIMES=3 analog)
-    retried = (
-        missed.filter(F.col("retry_count") < cfg.max_retries - 1)
-        .withColumn("status", F.lit(STATUS_QUEUED))
-        .withColumn("retry_count", (F.col("retry_count") + 1).cast("int"))
-        .withColumn("priority", F.lit(1))
-        .withColumn("op_seq", mark_op)
-    )
-    exhausted = (
-        missed.filter(F.col("retry_count") >= cfg.max_retries - 1)
-        .withColumn("status", F.lit(STATUS_EXHAUSTED))
-        .withColumn("retry_count", (F.col("retry_count") + 1).cast("int"))
-        .withColumn("op_seq", mark_op)
-    )
-    denied_marks = denied.withColumn("status", F.lit(STATUS_ROBOTS_DENIED)).withColumn(
-        "op_seq", mark_op
-    )
-
-    marks = (
-        done.select(*_FRONTIER_COLS)
-        .unionByName(retried.select(*_FRONTIER_COLS))
-        .unionByName(exhausted.select(*_FRONTIER_COLS))
-        .unionByName(denied_marks.select(*_FRONTIER_COLS))
-    )
-
-    # ---- the round's single job: tee write + observed counts ----
-    seen_rows = new_rows.select(
-        "fp", "url", "host_bucket", F.lit(round_no).alias("first_round")
-    )
-    fetch_rows = sliced.join(_bcast(fetched_urls), "url", "left_semi").select(
-        F.lit(round_no).alias("round"), "host", "url", "priority", "seq",
-        F.col("_rn").alias("rn"),
-    )
+    hit = F.col("_hit").isNotNull()
+    retry = ~hit & (F.col("retry_count") < cfg.max_retries - 1)
+    mark = _tee_row("frontier", _cols(
+        *_FRONTIER_COLS,
+        status=F.when(hit, F.lit(STATUS_DONE))
+        .when(retry, F.lit(STATUS_QUEUED))
+        .otherwise(F.lit(STATUS_EXHAUSTED)),
+        retry_count=F.when(hit, F.col("retry_count")).otherwise(F.col("retry_count") + 1),
+        priority=F.when(retry, F.lit(1)).otherwise(F.col("priority")),
+        op_seq=mark_op,
+    ))
+    log_row = _tee_row("fetch_log", _cols(
+        "host", "url", "priority", "seq", round=F.lit(round_no), rn=F.col("_rn"),
+    ))
+    fetched_urls = ext.select("url", F.lit(True).alias("_hit"))
     tee = (
-        _pad(marks.unionByName(new_rows), "frontier")
-        .unionByName(_pad(seen_rows, "seen"))
-        .unionByName(_pad(records, "results"))
-        .unionByName(_pad(fetch_rows, "fetch_log"))
+        sliced.join(_bcast(fetched_urls), "url", "left")
+        .select(F.inline(F.filter(
+            F.array(mark, F.when(hit, log_row)), lambda r: r.isNotNull()
+        )))
+        .unionByName(denied.select(F.inline(F.array(_tee_row("frontier", _cols(
+            *_FRONTIER_COLS, status=F.lit(STATUS_ROBOTS_DENIED), op_seq=mark_op,
+        ))))))
+        .unionByName(new_rows.select(F.inline(F.array(
+            _tee_row("frontier", _cols(*_FRONTIER_COLS)),
+            _tee_row("seen", _cols("fp", "url", "host_bucket",
+                                   first_round=F.lit(round_no))),
+        ))))
+        .unionByName(records.select(F.inline(F.array(
+            _tee_row("results", _cols(*records.columns))
+        ))))
     )
-    # (emit_text: the corpus files were already written by action 2 — the tee
-    # never carries the text a second time; commit_round references the
-    # staging dir directly)
-    # action 4 of 4: the tee write. Only seen/results counts are unknown
-    # at this point (popped/denied from action 1, fetched from action 2,
-    # new from action 3) — the attached Observation collects them during
-    # the write itself.
+    # (emit_text: the corpus files were already written by the staging
+    # write — the tee never carries the text a second time; commit_round
+    # references the staging dir directly)
+    # Only seen/results/exhausted counts are unknown at this point
+    # (popped/denied and fetched were counted above) — the attached
+    # Observation collects them during the write itself.
     obs = Observation()
     tee = tee.observe(
         obs,
@@ -710,7 +687,6 @@ def run_round(
     sliced.unpersist()
     denied.unpersist()
     ext.unpersist()
-    new_rows.unpersist()
 
     if not has_data:
         # defensive: popped+denied > 0 implies mark rows exist, so the tee
@@ -761,11 +737,12 @@ def run_round(
         shared,
         {"frontier": n_popped_pre + n_denied_pre + n_new, "seen": n_new,
          "results": n_items, "fetch_log": n_fetched,
-         # one corpus row per fetched url (ext is url-unique) — the count
-         # is already known from action 2, no extra Observation needed
+         # one corpus row per fetched url (ext is url-unique) — the
+         # staging write already counted them
          "corpus": n_fetched if emit_text else 0},
         round_no,
         corpus_dir=corpus_dir,
+        corpus_schema=corpus_schema,
         meta=meta,
         metrics_rows=[(round_no, k, int(v)) for k, v in counts.items()
                       if k != "queued_after"]

@@ -19,6 +19,7 @@ from dataclasses import dataclass, field
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from . import scheduler
 from .crawl import run_round, seed_frontier
 from .scheduler import CrawlConfig
 from .schema import STATUS_QUEUED
@@ -72,10 +73,6 @@ class CrawlRunner:
         r = start
         budget_scale = 1.0
         items_emitted = 0
-        # robots is static input for the whole run: count it ONCE so
-        # with_robots can size-gate its broadcast hint —
-        # one tiny job per run, not per round
-        robots_count = robots.count()
         # remaining-queued is tracked ARITHMETICALLY from each round's own
         # counts (queued' = queued - done - exhausted - denied + new_links;
         # retried rows stay queued) — one state count at start, then the
@@ -85,6 +82,17 @@ class CrawlRunner:
         # state-resolve count job runs only on pre-hint stores
         hint = self.store.queued_after_hint()
         queued = hint if hint is not None else self.queued_count()
+        robots_count = None
+        if max_rounds > 0 and queued > 0:
+            # robots is static input for the whole run: collect it ONCE,
+            # up to one row past the broadcast gate. When it fits, every
+            # round joins a local relation with a known size (hinted
+            # broadcast, no rescan of the caller's frame); above the gate
+            # the rounds keep the caller's frame, un-hinted.
+            table = robots.limit(scheduler.BROADCAST_ROBOTS_MAX_HOSTS + 1).toArrow()
+            if table.num_rows <= scheduler.BROADCAST_ROBOTS_MAX_HOSTS:
+                robots = self.spark.createDataFrame(table)
+                robots_count = table.num_rows
         while r < start + max_rounds and queued > 0:
             c = run_round(self.spark, self.store, pages, robots, self.cfg, r,
                           budget_scale=budget_scale, backend=backend,

@@ -42,11 +42,12 @@ POP_SALTS = 8
 # Broadcast size gate for the robots table (N4), also used for the DNS
 # map in dns.with_addrs. One row per KNOWN host is not provably
 # broadcast-sized at the 10^10-URL design point: 10^7-10^8 hosts x
-# deny-prefix arrays is multi-GB. The runner counts the robots frame ONCE
-# per run (it is static input) and with_robots hints broadcast only when
-# that count is at or under this bound; above it — or when no count was
-# supplied — the join is left un-hinted and AQE picks the strategy from
-# runtime stats (it still broadcasts genuinely small robots tables).
+# deny-prefix arrays is multi-GB. The runner collects the robots frame ONCE
+# per run (it is static input), up to one row past this bound; when it fits,
+# the rounds join that local relation and with_robots hints broadcast.
+# Above it — or when no count was supplied — the join is left un-hinted and
+# AQE picks the strategy from runtime stats (it still broadcasts genuinely
+# small robots tables).
 BROADCAST_ROBOTS_MAX_HOSTS = 1_000_000
 # AUTOTHROTTLE feedback factors (Douban2/settings.py:29-33): budget scale
 # multiplier after a bad round, after a clean round, the miss ratio that
@@ -146,8 +147,8 @@ def with_robots(
     deny-prefix arrays -> multi-GB), and a broadcast HINT is honored
     unconditionally. So the hint is applied only when the caller supplies
     a measured ``robots_count`` at or under
-    ``BROADCAST_ROBOTS_MAX_HOSTS`` (CrawlRunner counts the static
-    robots input once per run). With no count, the join is un-hinted and
+    ``BROADCAST_ROBOTS_MAX_HOSTS`` (CrawlRunner collects the static
+    robots input once per run and passes its size). With no count, the join is un-hinted and
     AQE chooses from runtime stats — still a broadcast join for small
     robots tables, a shuffle join for web-scale ones.
     """

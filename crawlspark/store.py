@@ -9,7 +9,7 @@ implements the same contract natively (SURVEY.md §1.3):
 
 * a table = a chain of immutable JSON **manifests**, each listing the data
   files (parquet directories) that make up that snapshot, plus round
-  number, per-file lineage (row counts), and metrics;
+  number, per-file lineage (row counts and Spark schema), and metrics;
 * **commits are atomic**: manifest written to a temp file then os.rename'd;
   a CURRENT pointer file renamed last. A crash between data write and
   manifest commit leaves only unreferenced orphan files — exactly
@@ -31,8 +31,44 @@ import json
 import os
 import uuid
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, Observation, SparkSession, Window
 from pyspark.sql import functions as F
+from pyspark.sql.pandas.types import from_arrow_schema
+from pyspark.sql.types import (
+    ArrayType,
+    DoubleType,
+    IntegerType,
+    LongType,
+    StringType,
+    StructField,
+    StructType,
+)
+
+# Layout of a round's tee write (crawl.run_round): one wide file set,
+# partitioned by ``_table``, whose rows carry every output table's columns;
+# each table's reader prunes back to its declared columns (parquet is
+# columnar, so the null columns of other tables cost ~nothing on disk or at
+# scan).
+TEE_SCHEMA = StructType([StructField(name, dtype) for name, dtype in [
+    # frontier / seen
+    ("fp", StringType()), ("url", StringType()), ("host", StringType()),
+    ("host_bucket", IntegerType()), ("priority", IntegerType()),
+    ("depth", IntegerType()), ("seq", LongType()), ("status", StringType()),
+    ("retry_count", IntegerType()), ("discovered_round", IntegerType()),
+    ("op_seq", LongType()), ("first_round", IntegerType()),
+    # results
+    ("rank", LongType()), ("name", StringType()), ("rate", DoubleType()),
+    ("num", LongType()), ("genres", ArrayType(StringType())),
+    ("crawl_round", IntegerType()),
+    # fetch_log
+    ("round", IntegerType()), ("rn", IntegerType()),
+]])
+
+
+def _entry(path: str, rows: int, schema: StructType) -> dict:
+    """A manifest file entry: the files' path, row count (lineage) and
+    Spark schema (StructType JSON), so reads need not infer it."""
+    return {"path": path, "rows": rows, "schema": schema.jsonValue()}
 
 
 class SnapshotStore:
@@ -103,7 +139,7 @@ class SnapshotStore:
             "snapshot_id": sid,
             "parent_id": parent,
             "round": round_no,
-            "files": files,  # [{path, rows}] — per-partition lineage
+            "files": files,  # [{path, rows, schema}] — per-partition lineage
             "meta": meta or {},
         }
         tmp = f"{self.path}/manifests/.tmp-{uuid.uuid4().hex}"
@@ -119,20 +155,15 @@ class SnapshotStore:
     # -- data ops -------------------------------------------------------------
 
     def append(self, df: DataFrame, round_no: int, meta: dict | None = None) -> int:
-        """Append a delta file-set and commit a new snapshot (old files kept).
-        The lineage row count is a (metadata-only) parquet count of the
-        written files — one extra job per commit. The crawl round never
-        pays it: its tee write commits through commit_external with counts
-        from the write's own Observation."""
+        """Append a delta file-set and commit a new snapshot (old files
+        kept). The only Spark jobs are the write's own (one for a
+        shuffle-free frame): its Observation gives the lineage row count
+        and the manifest records the written schema, so neither this
+        commit nor a later read scans the files again."""
         rel = f"data/{uuid.uuid4().hex}"
-        full = f"{self.path}/{rel}"
-        w = df.write.mode("overwrite")
-        if "fp" in df.columns:  # D1: bloom-filter the fingerprint column
-            w = w.option("parquet.bloom.filter.enabled#fp", "true")
-        w.parquet(full)
-        rows = self.spark.read.parquet(full).count()
+        rows = self._write(df, rel)
         prev = self.manifest()
-        files = (prev["files"] if prev else []) + [{"path": rel, "rows": rows}]
+        files = (prev["files"] if prev else []) + [_entry(rel, rows, df.schema)]
         return self._commit(files, round_no, meta)
 
     def overwrite(self, df: DataFrame, round_no: int, meta: dict | None = None) -> int:
@@ -142,17 +173,22 @@ class SnapshotStore:
         file) + sortWithinPartitions (monotone row groups -> min/max
         pruning for scans filtering on those columns)."""
         rel = f"data/{uuid.uuid4().hex}"
-        full = f"{self.path}/{rel}"
         if self.sort_cols and all(c in df.columns for c in self.sort_cols):
             df = df.repartition(F.col(self.sort_cols[0])).sortWithinPartitions(
                 *self.sort_cols
             )
-        w = df.write.mode("overwrite")
-        if "fp" in df.columns:
+        rows = self._write(df, rel)
+        return self._commit([_entry(rel, rows, df.schema)], round_no, meta)
+
+    def _write(self, df: DataFrame, rel: str) -> int:
+        """Write ``df`` as parquet under ``rel``; returns its row count,
+        observed during the write (an empty write still reports 0)."""
+        obs = Observation()
+        w = df.observe(obs, F.count(F.lit(1)).alias("n")).write.mode("overwrite")
+        if "fp" in df.columns:  # D1: bloom-filter the fingerprint column
             w = w.option("parquet.bloom.filter.enabled#fp", "true")
-        w.parquet(full)
-        rows = self.spark.read.parquet(full).count()
-        return self._commit([{"path": rel, "rows": rows}], round_no, meta)
+        w.parquet(f"{self.path}/{rel}")
+        return int(obs.get["n"])
 
     def _full_path(self, p: str) -> str:
         return p if p.startswith("/") else f"{self.path}/{p}"
@@ -165,28 +201,28 @@ class SnapshotStore:
 
     def _read_files(self, files: list[dict]) -> DataFrame | None:
         # narrow files (own-schema writes, compactions) and wide files (the
-        # round tee) can coexist in one snapshot; read each group with its
-        # own physical schema, prune to the declared columns, union.
+        # round tee) can coexist in one snapshot; read each physical schema
+        # as its own group, prune to the declared columns, union. A group
+        # whose entries record their schema is read with it, so building
+        # the DataFrame runs no schema-inference job; entries written before
+        # manifests carried schemas are read by inference.
         if not files:
             return None
-        narrow = [f for f in files if not f.get("wide")]
-        wide = [f for f in files if f.get("wide")]
-        dfs = []
-        if narrow:
-            df = self.spark.read.parquet(*[self._full_path(f["path"]) for f in narrow])
+        if not self.columns and any(f.get("wide") for f in files):
+            raise ValueError(f"wide files present but no declared columns at {self.path}")
+        groups: dict[tuple, list[str]] = {}
+        for f in files:
+            key = (bool(f.get("wide")), json.dumps(f.get("schema"), sort_keys=True))
+            groups.setdefault(key, []).append(self._full_path(f["path"]))
+        out = None
+        for (_, schema), paths in groups.items():
+            reader = self.spark.read
+            if schema != "null":
+                reader = reader.schema(StructType.fromJson(json.loads(schema)))
+            df = reader.parquet(*paths)
             if self.columns:
                 df = df.select(*self.columns)
-            dfs.append(df)
-        if wide:
-            if not self.columns:
-                raise ValueError(f"wide files present but no declared columns at {self.path}")
-            dfs.append(
-                self.spark.read.parquet(*[self._full_path(f["path"]) for f in wide])
-                .select(*self.columns)
-            )
-        out = dfs[0]
-        for d in dfs[1:]:
-            out = out.unionByName(d)
+            out = df if out is None else out.unionByName(df)
         return out
 
     def added_since(
@@ -251,14 +287,16 @@ class SnapshotStore:
         return self._read_files(added)
 
     def commit_external(
-        self, abs_path: str, rows: int, round_no: int, meta: dict | None = None
+        self, abs_path: str, rows: int, schema: StructType, round_no: int,
+        meta: dict | None = None,
     ) -> int:
         """Commit a snapshot referencing an already-written (wide) file set
         — the per-round tee write. No Spark job: the caller supplies the
-        row count (from the write job's own Observation metrics)."""
+        row count (from the write job's own Observation metrics) and the
+        files' schema."""
         prev = self.manifest()
         files = (prev["files"] if prev else []) + [
-            {"path": abs_path, "rows": rows, "wide": True}
+            dict(_entry(abs_path, rows, schema), wide=True)
         ]
         return self._commit(files, round_no, meta)
 
@@ -281,7 +319,9 @@ class SnapshotStore:
         )
         pq.write_table(table, f"{full}/part-00000.parquet")
         prev = self.manifest()
-        files = (prev["files"] if prev else []) + [{"path": rel, "rows": len(rows)}]
+        files = (prev["files"] if prev else []) + [
+            _entry(rel, len(rows), from_arrow_schema(arrow_schema))
+        ]
         return self._commit(files, round_no, meta)
 
     def n_delta_files(self) -> int:
@@ -479,38 +519,32 @@ class FrontierStore:
         meta: dict | None = None,
         metrics_rows: list[tuple] | None = None,
         corpus_dir: str | None = None,
+        corpus_schema: StructType | None = None,
     ) -> int:
         """Commit one round's tee write into every table's snapshot chain.
 
-        Input: the already-written ``shared_dir`` (partitioned by _table)
-        plus per-table row counts from the write job's Observation — so the
-        whole commit is manifest fsyncs, zero additional Spark jobs.
+        Input: the already-written ``shared_dir`` (partitioned by _table,
+        laid out as ``TEE_SCHEMA``) plus per-table row counts from the
+        write job's Observation — so the commit itself is manifest fsyncs,
+        zero Spark jobs; only a compaction it triggers runs any.
         Commit order is the recovery contract: siblings first, frontier
         LAST (the frontier snapshot is the round's atomic commit point;
         resume rolls the siblings back to it).
 
-        ``corpus_dir``: emit_text rounds write the corpus files as their
-        OWN staging dir (run_round's action 2 — the text never rides the
-        tee); when set, the corpus commit references it instead of the
-        tee's ``_table=corpus`` partition.
+        ``corpus_dir``/``corpus_schema``: emit_text rounds write the corpus
+        files as their OWN staging dir (the text never rides the tee); the
+        corpus commit references it, with its schema.
         """
-        if table_rows.get("seen"):
-            self.seen.commit_external(
-                f"{shared_dir}/_table=seen", table_rows["seen"], round_no
-            )
-        if table_rows.get("results"):
-            self.results.commit_external(
-                f"{shared_dir}/_table=results", table_rows["results"], round_no
-            )
-        if table_rows.get("fetch_log"):
-            self.fetch_log.commit_external(
-                f"{shared_dir}/_table=fetch_log", table_rows["fetch_log"], round_no
-            )
+        for name, table in (("seen", self.seen), ("results", self.results),
+                            ("fetch_log", self.fetch_log)):
+            if table_rows.get(name):
+                table.commit_external(
+                    f"{shared_dir}/_table={name}", table_rows[name], TEE_SCHEMA,
+                    round_no,
+                )
         if table_rows.get("corpus"):
             self.corpus.commit_external(
-                corpus_dir if corpus_dir is not None
-                else f"{shared_dir}/_table=corpus",
-                table_rows["corpus"], round_no,
+                corpus_dir, table_rows["corpus"], corpus_schema, round_no
             )
         if metrics_rows:
             import pyarrow as pa
@@ -522,7 +556,8 @@ class FrontierStore:
                 round_no,
             )
         sid = self.frontier.commit_external(
-            f"{shared_dir}/_table=frontier", table_rows.get("frontier", 0), round_no, meta
+            f"{shared_dir}/_table=frontier", table_rows.get("frontier", 0),
+            TEE_SCHEMA, round_no, meta,
         )
         # compaction for EVERY table (a delta file per round forever would
         # make the per-round read O(files)): frontier/results rewrite their

@@ -206,3 +206,60 @@ def test_nonpositive_crawl_delay_gets_default_budget(spark):
            for r in with_robots(queued, robots, CFG, robots_count=4).collect()}
     assert got == {h: CFG.host_budget(d) for h, d in delays.items()}
     assert got["zero.example.com"] == got["neg.example.com"] == 20
+
+
+def _two_round_crawl(spark, golden_site, root, robots, monkeypatch):
+    """Crawl the golden site for two rounds; returns the runner and the
+    (robots frame, robots_count) each round was handed."""
+    import crawlspark.runner as runner_mod
+
+    handed = []
+    run_round = runner_mod.run_round
+
+    def spy(*args, **kwargs):
+        handed.append((args[3], kwargs["robots_count"]))
+        return run_round(*args, **kwargs)
+
+    monkeypatch.setattr(runner_mod, "run_round", spy)
+    runner = CrawlRunner(spark, root, CFG)
+    runner.init(spark.createDataFrame(golden_site["seeds"], schema=SEEDS))
+    runner.run(spark.createDataFrame(golden_site["pages"], schema=PAGES), robots,
+               max_rounds=2)
+    return runner, handed
+
+
+def test_robots_above_local_relation_gate(spark, golden_site, tmp_path, monkeypatch):
+    """A robots input above BROADCAST_ROBOTS_MAX_HOSTS is not collected:
+    the rounds get the caller's frame, un-hinted, and crawl exactly as the
+    simulator does."""
+    from crawlspark import scheduler
+
+    assert golden_site["robots"]
+    monkeypatch.setattr(scheduler, "BROADCAST_ROBOTS_MAX_HOSTS",
+                        len(golden_site["robots"]) - 1)
+    robots = spark.createDataFrame(golden_site["robots"], schema=ROBOTS)
+    runner, handed = _two_round_crawl(spark, golden_site, str(tmp_path / "s"),
+                                      robots, monkeypatch)
+    assert len(handed) == 2
+    assert all(frame is robots and n is None for frame, n in handed)
+    sim = simulate({p["url"]: p["html"] for p in golden_site["pages"]},
+                   golden_site["seeds"], golden_site["robots"], CFG, max_rounds=2)
+    assert runner.fetch_sequence() == sim.fetch_sequence
+    assert runner.seen_urls() == sim.seen_urls
+
+
+def test_empty_robots_default_allows(spark, golden_site, tmp_path, monkeypatch):
+    """An empty robots input becomes an empty local relation: every host
+    default-allows, as in the simulator with no robots rows."""
+    from crawlspark.schema import STATUS_ROBOTS_DENIED
+
+    robots = spark.createDataFrame([], schema=ROBOTS)
+    runner, handed = _two_round_crawl(spark, golden_site, str(tmp_path / "s"),
+                                      robots, monkeypatch)
+    assert [n for _, n in handed] == [0, 0]
+    sim = simulate({p["url"]: p["html"] for p in golden_site["pages"]},
+                   golden_site["seeds"], [], CFG, max_rounds=2)
+    assert runner.fetch_sequence() == sim.fetch_sequence
+    assert runner.seen_urls() == sim.seen_urls
+    assert runner.store.frontier_state().filter(
+        F.col("status") == STATUS_ROBOTS_DENIED).count() == 0

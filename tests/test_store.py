@@ -243,3 +243,74 @@ def test_queued_after_hint_matches_state(spark, tmp_path):
     res = resumed.run(pages, robots)
     assert sum(c.get("popped", 0) for c in res.counts) <= cfg.max_retries
     assert resumed.store.queued_after_hint() == resumed.queued_count() == 0
+
+
+def _one_round_crawl(spark, root):
+    """A store with the seed commit and one committed emit_text round;
+    compaction at 2 delta files, so the frontier holds a rewritten base."""
+    from crawlspark.runner import CrawlRunner
+    from crawlspark.scheduler import CrawlConfig
+    from crawlspark.schema import PAGES, ROBOTS, SEEDS
+    from crawlspark.synth import SiteSpec, generate_site
+
+    site = generate_site(SiteSpec(n_hosts=1, lists_per_host=1, per_list=4, seed=3))
+    runner = CrawlRunner(spark, root, CrawlConfig(emit_text=True))
+    runner.store.COMPACT_EVERY = 2
+    runner.init(spark.createDataFrame(site["seeds"], schema=SEEDS))
+    runner.run(spark.createDataFrame(site["pages"], schema=PAGES),
+               spark.createDataFrame(site["robots"], schema=ROBOTS), max_rounds=1)
+    return runner.store
+
+
+def test_store_reads_launch_no_jobs(spark, tmp_path):
+    """Manifest entries carry their files' schema, so building a table's
+    DataFrame runs no schema-inference job — for tee files, a compacted
+    base, the emit_text corpus staging files and pyarrow-written metrics
+    alike — and the observed lineage row counts match the data."""
+    st = _one_round_crawl(spark, str(tmp_path / "s"))
+    sc = spark.sparkContext
+    group = "test-store-reads-launch-no-jobs"
+    sc.setJobGroup(group, "store reads")
+    try:
+        dfs = [st.frontier_state(), st.seen_state(), st.fetch_log_state(),
+               st.corpus_state(), st.metrics_state()]
+        jobs = sc.statusTracker().getJobIdsForGroup(group)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert jobs == []
+    assert all(df is not None for df in dfs)
+    assert any(f.get("wide") is None for f in st.frontier.manifest()["files"])
+    for table in (st.frontier, st.seen, st.fetch_log, st.corpus, st.metrics):
+        files = table.manifest()["files"]
+        assert all("schema" in f for f in files)
+        assert table.read().count() == sum(f["rows"] for f in files)
+
+
+def test_seed_dedup_one_row_per_fingerprint(spark, tmp_path):
+    """Raw forms of one URL (host case, default port, query order,
+    fragment) collapse to one frontier row and one seen row, and the
+    lowest ``seq`` wins; the seed commit's queued count is the number of
+    distinct fingerprints."""
+    from crawlspark.crawl import seed_frontier
+    from crawlspark.scheduler import CrawlConfig
+    from crawlspark.schema import SEEDS
+
+    forms = [("https://Dup.example.com/p?b=2&a=1", 5, 4),
+             ("https://dup.example.com:443/p?a=1&b=2", 3, 2),
+             ("https://DUP.EXAMPLE.COM/p?a=1&b=2#frag", 7, 6),
+             ("https://dup.example.com/p?b=2&a=1#x", 9, 8)]
+    others = [("https://a.example.com/x", 0, 1), ("https://b.example.com/y", 0, 3),
+              ("https://a.example.com/z", 1, 5)]
+    seeds = spark.createDataFrame(
+        [{"url": u, "priority": p, "seq": s} for u, p, s in forms + others],
+        schema=SEEDS)
+    fs = FrontierStore(spark, str(tmp_path / "s"))
+    seed_frontier(spark, fs, seeds, CrawlConfig())
+
+    frontier = fs.frontier_log().collect()
+    seen = fs.seen_state().collect()
+    assert len(frontier) == len({r["fp"] for r in frontier}) == 4
+    assert sorted(r["fp"] for r in seen) == sorted(r["fp"] for r in frontier)
+    dup = [r for r in frontier if r["url"] == "https://dup.example.com/p?a=1&b=2"]
+    assert [(r["seq"], r["priority"]) for r in dup] == [(2, 3)]
+    assert fs.queued_after_hint() == 4
