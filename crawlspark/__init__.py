@@ -15,9 +15,11 @@ crawler + SQLite/Parquet analytics tail; see SURVEY.md):
 * the SQLite analytics plane                -> DataFrame/SQL builders
   (``crawlspark.analytics``)
 
-All per-row logic lives in four Arrow-vectorized kernels
-(``crawlspark.kernels``); everything else is declarative DataFrame/SQL so
-Catalyst owns pushdown, pruning, join selection, and AQE skew handling.
+The crawl round's per-row logic lives in four Arrow-vectorized kernels
+(``crawlspark.kernels``); the rest of the round is declarative DataFrame/SQL
+so Catalyst owns pushdown, pruning, join selection, and AQE skew handling.
+Per-row Python elsewhere (robots parsing, DNS, WARC, dedup, textops,
+streaming state) is likewise pandas_udf / mapInPandas over Arrow batches.
 """
 
 __version__ = "0.1.0"

@@ -257,15 +257,6 @@ def key_lookup(m: DataFrame, rank: int) -> DataFrame:  # R29
     return m.filter(F.col("rank") == rank).limit(1)
 
 
-def rating_histogram(m: DataFrame) -> DataFrame:  # R28 (utils/data_storage.py:224-237)
-    bucket = F.concat(F.floor(F.col("rate") * 2) / 2, F.lit("-"))
-    return (
-        m.groupBy(F.floor(F.col("rate")).cast("long").alias("rate_floor"))
-        .agg(F.count("*").alias("cnt"))
-        .orderBy("rate_floor")
-    )
-
-
 def crawl_summary(m: DataFrame) -> DataFrame:  # S8 (crawl_summary.txt analog)
     return m.agg(
         F.count("*").alias("total"),

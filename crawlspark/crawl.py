@@ -1,4 +1,6 @@
-"""The fetch-extract-emit round — one scheduler round as one Spark job DAG.
+"""The fetch-extract-emit round — one scheduler round as a few Spark
+actions (21 Spark jobs on the traced ``crawl_polite`` benchmark, see
+``run_round``).
 
 Spark-native restatement of the reference's per-request loop (SURVEY §3.1):
 Redis ZSET pop -> middleware chain -> Twisted HTTP GET -> XPath parse ->
@@ -180,32 +182,21 @@ def _tee_new_urls(
     return shared, {"frontier": int(vals["frontier"] or 0), "seen": int(vals["seen"] or 0)}
 
 
-def seed_frontier(spark: SparkSession, store: FrontierStore, seeds: DataFrame, cfg: CrawlConfig) -> int:
-    """Round-0 seed injection (Q3/Q10): canonicalize, fingerprint, bucket,
-    insert into frontier + seen — one tee write (3 Spark jobs on the
-    traced ``crawl_polite`` benchmark, seed 7). Idempotent re-init = a new
-    snapshot chain (mirror of the reference deleting old Redis keys in
-    its scripts/run_crawler.py)."""
-    shared, n = _tee_new_urls(store, seeds, cfg, 0)
-    if n is None:
+def seed_frontier(spark: SparkSession, store: FrontierStore, seeds: DataFrame, cfg: CrawlConfig) -> dict:
+    """Seed injection (Q3/Q10): an ``ingest_urls`` of the seeds, so
+    re-seeding a crawl adds only unseen URLs at its current round and
+    keeps its history (the reference keeps its Redis queue and dupefilter
+    across runs, SCHEDULER_PERSIST=True). On an empty store the commit
+    lands at round −1 and its tee write is 3 Spark jobs on the traced
+    ``crawl_polite`` benchmark (seed 7). Raises only when the store is
+    empty and nothing was written."""
+    out = ingest_urls(spark, store, seeds, cfg)
+    if not out["ingested"] and store.frontier.manifest() is None:
         raise ValueError("seed_frontier: empty seed set")
-    return store.commit_round(
-        shared,
-        n,
-        round_no=-1,
-        # queued_after: running queued count carried in the manifest so
-        # resume never pays a state-resolve count job (store.queued_after_hint)
-        meta={"phase": "seed", "queued_after": n["frontier"]},
-    )
+    return out
 
 
-def ingest_urls(
-    spark: SparkSession,
-    store: FrontierStore,
-    urls: DataFrame,
-    cfg: CrawlConfig,
-    round_no: int | None = None,
-) -> dict:
+def ingest_urls(spark: SparkSession, store: FrontierStore, urls: DataFrame, cfg: CrawlConfig) -> dict:
     """Mid-crawl URL injection (Q5-Q7 analog: the reference's Kafka
     url_manager consuming discovered/seed URLs continuously,
     /root/reference/url_manager/kafka_url_manager.py). Canonicalize ->
@@ -213,53 +204,20 @@ def ingest_urls(
     frontier + seen. Idempotent: re-ingesting the same URLs is a no-op.
 
     ``urls`` needs (url, priority, seq); rows are queued at depth 0 with
-    op_seq = 1 (an insert — any later mark beats it).
-
-    ``round_no`` defaults to the store's LAST COMMITTED round: an ingest
-    commit must never move the frontier's round backwards, or the next
-    resume_round() would roll every sibling table back to it and discard
-    later rounds' snapshots (and restart marks would lose to higher
-    insert op_seqs — rows stuck 'queued' forever). Committing at the
-    current round keeps resume at last+1 with all snapshots intact.
-    Passing an explicit round_no below the current round raises.
-    """
-    last = store.last_committed_round()
-    if round_no is None:
-        round_no = last if last is not None else -1
-    elif last is not None and round_no < last:
-        raise ValueError(
-            f"ingest_urls round_no={round_no} < last committed round {last}: "
-            "committing behind the frontier would make resume roll sibling "
-            "tables back and discard later snapshots; omit round_no to use "
-            "the current round"
-        )
-
-    shared, n = _tee_new_urls(store, urls, cfg, max(round_no, 0),
+    op_seq = 1 (an insert — any later mark beats it). The commit lands at
+    the frontier's current round and adds the new rows to the queued
+    count — the frontier commit protocol, ``FrontierStore``; it may race
+    a ``run_round`` commit (continuous ``stream_url_ingest`` mode)."""
+    # the rows' discovered_round stamp; the commit picks its own round
+    shared, n = _tee_new_urls(store, urls, cfg, max(store.landing_round(), 0),
                               seen=store.seen_state())
     if n is None:
         return {"ingested": 0}
-    meta = {"phase": "ingest"}
-    # Commit-time re-reads (concurrent stream_url_ingest mode):
-    # a run_round commit may have landed while our tee write ran. (a) Never
-    # commit BEHIND the frontier's current round — that would make
-    # resume_round() re-run an already-committed round with corrupted
-    # op_seq arithmetic; advance to the round committed now. (b) The queued
-    # hint must build on the hint as of THIS commit, not a stale read —
-    # run_round's own commit symmetric-folds any ingest that lands before
-    # it (see run_round), so reading both sides at commit time converges.
-    last_now = store.last_committed_round()
-    if last_now is not None and last_now > round_no:
-        round_no = last_now
-    prior = store.queued_after_hint()
-    if prior is not None:
-        meta["queued_after"] = prior + n["frontier"]
-    store.commit_round(shared, n, round_no, meta=meta)
+    store.commit_round(shared, n, meta={"phase": "ingest"}, queued_delta=n["frontier"])
     return {"ingested": n["frontier"]}
 
 
-def rescore_frontier(
-    store: FrontierStore, scores: DataFrame, round_no: int | None = None
-) -> dict:
+def rescore_frontier(store: FrontierStore, scores: DataFrame) -> dict:
     """Re-prioritize QUEUED frontier rows from a score table — the
     OPIC/PageRank application (Abiteboul et al. 2003; graph.pagerank
     produces the scores from the crawl's own transition graph): big
@@ -274,31 +232,18 @@ def rescore_frontier(
     integer priority (higher pops sooner). Unmatched queued rows keep
     their current priority; non-queued rows are never touched.
 
-    Mechanics: resolve state, join scores, OVERWRITE the frontier —
-    the compaction shape, content-preserving except the priority
+    Mechanics: resolve state, join scores, ``FrontierStore.rewrite_frontier``
+    — the compaction shape, content-preserving except the priority
     column, so op_seq arithmetic is untouched (a rescore delta row
     cannot be expressed in the 4r+k op_seq lattice without colliding
-    with insert/mark slots). Cost is O(frontier-state) like any
-    compaction; run it every k rounds, not per round, and BETWEEN
-    rounds on the driver thread — the overwrite has no compare-and-swap,
-    so a concurrent run_round commit would be clobbered (streaming
-    ingest_urls is the only operation with a concurrent-commit
-    contract). The commit is
-    meta-flagged a rewrite, so added_since() consumers skip it, and the
-    queued_after hint carries across (the queued COUNT is unchanged by
-    construction — only priorities move)."""
+    with insert/mark slots) and the queued count carries across
+    unchanged (frontier commit protocol, ``FrontierStore``). Cost is
+    O(frontier-state) like any compaction; run it every k rounds, not
+    per round, and BETWEEN rounds on the driver thread. The commit is
+    meta-flagged a rewrite, so added_since() consumers skip it."""
     state = store.frontier_state()
     if state is None:
         return {"rescored": 0}
-    last = store.last_committed_round()
-    if round_no is None:
-        round_no = last if last is not None else 0
-    elif last is not None and round_no < last:
-        raise ValueError(
-            f"rescore_frontier round_no={round_no} < last committed round "
-            f"{last}: committing behind the frontier breaks resume; omit "
-            "round_no to use the current round"
-        )
     s = scores.select(
         F.col("url"), F.col("priority").cast("int").alias("_new_prio")
     ).dropDuplicates(["url"])
@@ -313,19 +258,11 @@ def rescore_frontier(
     n_changed = rescored.filter(
         (F.col("status") == STATUS_QUEUED)
     ).join(s, "url", "left_semi").count()
-    meta: dict = {"rescore": True}
-    hint = store.queued_after_hint()
-    if hint is not None:
-        meta["queued_after"] = hint
-    store.frontier.overwrite(
-        rescored.select(*_FRONTIER_COLS), round_no, meta=meta
-    )
+    store.rewrite_frontier(rescored.select(*_FRONTIER_COLS), {"rescore": True})
     return {"rescored": n_changed}
 
 
-def requeue_urls(
-    store: FrontierStore, urls: DataFrame, round_no: int | None = None
-) -> dict:
+def requeue_urls(store: FrontierStore, urls: DataFrame) -> dict:
     """Flip DONE frontier rows back to QUEUED — the revisit application
     (scheduler.revisit_schedule decides WHICH urls are due; this makes
     the decision actionable). The reference never re-crawls (its
@@ -343,28 +280,15 @@ def requeue_urls(
     typically boost fast-changing urls).
 
     Mechanics: same shape as rescore_frontier — resolve state, flip
-    matching rows, OVERWRITE (content-rewrite commit; added_since
-    consumers skip it structurally). Like rescore, run it BETWEEN
-    rounds on the driver thread: the overwrite is read-state-then-
-    replace with no compare-and-swap, so a run_round commit landing
-    inside the window would be clobbered (streaming ingest_urls is the
-    only operation with a concurrent-commit contract). op_seq stays: the next pop marks
-    done at op_seq 4r+2 with the NEW round r, which resolves above the
-    kept value exactly like any re-mark. The queued_after hint grows by
-    the number of flipped rows, so drain detection and zero-job resume
-    stay exact; runner.run() then continues a "finished" crawl."""
+    matching rows, ``FrontierStore.rewrite_frontier`` with the flipped
+    rows as its queued delta (frontier commit protocol,
+    ``FrontierStore``); run it BETWEEN rounds on the driver thread.
+    op_seq stays: the next pop marks done at op_seq 4r+2 with the NEW
+    round r, which resolves above the kept value exactly like any
+    re-mark. runner.run() then continues a "finished" crawl."""
     state = store.frontier_state()
     if state is None:
         return {"requeued": 0}
-    last = store.last_committed_round()
-    if round_no is None:
-        round_no = last if last is not None else 0
-    elif last is not None and round_no < last:
-        raise ValueError(
-            f"requeue_urls round_no={round_no} < last committed round "
-            f"{last}: committing behind the frontier breaks resume; omit "
-            "round_no to use the current round"
-        )
     cols = [F.col("url"), F.lit(True).alias("_req")]
     if "priority" in urls.columns:
         cols.append(F.col("priority").cast("int").alias("_new_prio"))
@@ -387,13 +311,8 @@ def requeue_urls(
     requeued = requeued.withColumn(
         "status", F.when(flip, F.lit(STATUS_QUEUED)).otherwise(F.col("status"))
     ).drop("_req", "_new_prio")
-    meta: dict = {"requeue": True}
-    hint = store.queued_after_hint()
-    if hint is not None:
-        meta["queued_after"] = hint + n_requeued
-    store.frontier.overwrite(
-        requeued.select(*_FRONTIER_COLS), round_no, meta=meta
-    )
+    store.rewrite_frontier(requeued.select(*_FRONTIER_COLS), {"requeue": True},
+                           queued_delta=n_requeued)
     return {"requeued": n_requeued}
 
 
@@ -429,9 +348,10 @@ def run_round(
     write, 5 for it, and 3 in ``commit_round``, all for the compaction
     that fires there.
 
-    Commit order matters: seen/results/fetch_log/metrics manifests first,
-    frontier LAST — the frontier snapshot is the round's atomic commit
-    point (resume rolls siblings back to it, SnapshotStore.rollback_to_round).
+    The round commits through ``FrontierStore.commit_round`` at
+    ``round_no``, with its queued delta and ``queued_before`` (the frontier
+    commit protocol, ``FrontierStore``); the returned counts carry the
+    ``queued_after`` it wrote.
     """
     state = store.frontier_state()
     if state is None:
@@ -705,35 +625,9 @@ def run_round(
         "denied": n_denied_pre,
         "new_links": n_new,
         "items": n_items,
-        # retried rows stay queued; exhausted/done/denied leave the queue —
-        # lets the runner track remaining-queued arithmetically and stop
-        # without paying a drain round (see CrawlRunner.run)
         "exhausted": n_exhausted,
     }
-    meta = {"counts": counts}
-    if queued_before is not None:
-        # Concurrent-ingest fold: ingest_urls may commit while
-        # this round is mid-flight (the advertised continuous
-        # stream_url_ingest mode). Its commit bumps the manifest's
-        # queued_after hint — but the caller's queued_before was read
-        # BEFORE that, so the arithmetic below would silently drop the
-        # ingested rows from the persisted count (drain could then stop
-        # the run with rows still queued, and zero-job resume would trust
-        # the short hint forever). Re-read the hint at commit time: in the
-        # serial case it equals queued_before exactly (it was written by
-        # the previous round's commit, which is where the caller read it),
-        # so any divergence IS the concurrent-ingest delta.
-        hint_now = store.queued_after_hint()
-        if hint_now is not None and hint_now != queued_before:
-            queued_before = hint_now
-        # running queued count, persisted with the round's atomic commit so
-        # a resumed run starts zero-job (store.queued_after_hint)
-        counts["queued_after"] = (
-            queued_before - counts["fetched"] - counts["exhausted"]
-            - counts["denied"] + counts["new_links"]
-        )
-        meta["queued_after"] = counts["queued_after"]
-    store.commit_round(
+    queued_after = store.commit_round(
         shared,
         {"frontier": n_popped_pre + n_denied_pre + n_new, "seen": n_new,
          "results": n_items, "fetch_log": n_fetched,
@@ -743,12 +637,17 @@ def run_round(
         round_no,
         corpus_dir=corpus_dir,
         corpus_schema=corpus_schema,
-        meta=meta,
-        metrics_rows=[(round_no, k, int(v)) for k, v in counts.items()
-                      if k != "queued_after"]
+        meta={"counts": counts},
+        metrics_rows=[(round_no, k, int(v)) for k, v in counts.items()]
         # P3 heartbeat observable: executor registry snapshot at commit
         # time, from Spark's own status tracker (one driver-side RPC —
         # liveness itself is the cluster manager's job, registry.py)
         + heartbeat_metrics(spark, round_no),
+        # retried rows stay queued; fetched, exhausted and denied rows
+        # leave the queue, discovered rows join it
+        queued_delta=n_new - n_fetched - n_exhausted - n_denied_pre,
+        queued_before=queued_before,
     )
+    if queued_after is not None:
+        counts["queued_after"] = queued_after
     return counts

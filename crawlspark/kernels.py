@@ -1,8 +1,10 @@
-"""The four Arrow-vectorized kernels — the ONLY per-row Python in the engine.
+"""The four Arrow-vectorized kernels — the per-row Python of the crawl round.
 
-Everything else is declarative DataFrame/SQL. Per the driver's input_hint
-("no per-row Python"), these are pandas_udf / mapInPandas kernels operating
-on Arrow columnar batches, never Python RDD maps.
+Everything else in the round is declarative DataFrame/SQL. Per the driver's
+input_hint ("no per-row Python"), these are pandas_udf / mapInPandas kernels
+operating on Arrow columnar batches, never Python RDD maps. Outside the
+round the same form also runs in ``robots.robots_from_pages``,
+``dns.resolve_hosts``, ``warc``, ``dedup``, ``textops`` and ``streaming``.
 
 Reference behaviors reproduced (citations into /root/reference/):
 

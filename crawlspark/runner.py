@@ -73,13 +73,11 @@ class CrawlRunner:
         r = start
         budget_scale = 1.0
         items_emitted = 0
-        # remaining-queued is tracked ARITHMETICALLY from each round's own
-        # counts (queued' = queued - done - exhausted - denied + new_links;
-        # retried rows stay queued) — one state count at start, then the
-        # drain is detected without paying a no-op round at the end.
-        # zero-job resume: the frontier manifest carries the running queued
-        # count (seed/ingest/round commits all write queued_after); the
-        # state-resolve count job runs only on pre-hint stores
+        # remaining-queued is the frontier's running queued count, which
+        # every frontier commit keeps (the frontier commit protocol,
+        # FrontierStore): the drain is detected without a count job or a
+        # no-op round, and it counts ingests that commit while the crawl
+        # runs. The state-resolve count job runs only on pre-hint stores
         hint = self.store.queued_after_hint()
         queued = hint if hint is not None else self.queued_count()
         robots_count = None
@@ -105,18 +103,7 @@ class CrawlRunner:
             )
             if c.get("popped", 0) == 0:
                 break
-            # single source of truth: run_round computed and PERSISTED the
-            # same arithmetic (queued - fetched - exhausted - denied +
-            # new_links) with the round's atomic commit
-            queued = c["queued_after"]
-            if queued <= 0:
-                # before declaring drain, re-check the persisted hint: a
-                # concurrent ingest_urls commit that landed AFTER this
-                # round's commit isn't in c["queued_after"] yet (commits
-                # landing BEFORE it were folded in by run_round itself)
-                h = self.store.queued_after_hint()
-                if h is not None:
-                    queued = h
+            queued = self.store.queued_after_hint()
             # max_items: maintained from per-round item deltas (already
             # known from the round's own aggregate) — no extra
             # results_state() resolve+count job per round. Emitted items

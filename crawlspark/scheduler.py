@@ -196,10 +196,11 @@ def pop_slice(
     """One round's admission. Returns (slice, denied).
 
     slice rows carry ``_rn`` — the pop position within the host, 1..budget —
-    which seeds the deterministic discovery counter of child links
-    (see crawl.assign_seq). The window shuffles once on host; with the
-    frontier partitioned by host_bucket this is bucket-local, and AQE
-    handles the hot-host skew the reference throttles by hand.
+    which seeds the deterministic discovery counter of child links (the
+    discovery-counter contract in the crawl module docstring). The window
+    shuffles once on host; with the frontier partitioned by host_bucket
+    this is bucket-local, and AQE handles the hot-host skew the reference
+    throttles by hand.
     """
     queued = frontier_state.filter(F.col("status") == STATUS_QUEUED)
     annotated = with_robots(queued, robots, cfg, budget_scale,

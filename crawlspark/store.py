@@ -380,6 +380,25 @@ class FrontierStore:
     * ``merge_seen`` = SADD into the dupefilter set, insert-if-absent;
     * ``upsert_results`` = HSET all_movies keyed by rank — idempotent
       last-writer-wins upsert (/root/reference/Douban2/pipelines.py:176-183).
+
+    **Frontier commit protocol.** Every frontier commit — a round's
+    (``commit_round`` from crawl.run_round), an ingest or seed
+    (``commit_round`` from crawl.ingest_urls) and a rewrite
+    (``rewrite_frontier``: compaction, crawl.rescore_frontier,
+    crawl.requeue_urls) — follows one rule, applied here at commit time
+    so a commit that raced another still lands consistently:
+
+    * *round*: a round's commit lands at that round; every other commit
+      lands at the frontier's current round (−1 on an empty store). No
+      commit moves the round backwards — the frontier round is the chain's
+      recovery point (``CrawlRunner.resume_round`` rolls siblings back to
+      it and resumes at round + 1);
+    * *queued count*: the manifest's ``queued_after`` is the hint read at
+      commit time plus the commit's queued delta (an empty frontier counts
+      as 0; on a store written before hints existed, the caller's
+      ``queued_before``). It is the running number of queued rows, so a
+      resume and the runner's drain check need no count job
+      (``queued_after_hint``).
     """
 
     COMPACT_EVERY = 8  # delta files per table before a base rewrite
@@ -452,6 +471,36 @@ class FrontierStore:
         self._maybe_compact(self.frontier, self.frontier_state, round_no)
         return sid
 
+    def landing_round(self, round_no: int | None = None) -> int:
+        """The round a frontier commit lands at (see the class docstring):
+        ``round_no`` for a round's own commit, else the current round."""
+        last = self.last_committed_round()
+        if round_no is None:
+            return -1 if last is None else last
+        if last is not None and round_no < last:
+            raise ValueError(
+                f"round {round_no} is behind the frontier's round {last}: "
+                "committing it would roll the crawl back on resume"
+            )
+        return round_no
+
+    def _queued_after(self, delta: int, queued_before: int | None = None) -> int | None:
+        """The ``queued_after`` a frontier commit writes (see the class
+        docstring); None when neither a hint nor a fallback exists."""
+        m = self.frontier.manifest()
+        base = 0 if m is None else m.get("meta", {}).get("queued_after", queued_before)
+        return None if base is None else int(base) + delta
+
+    def rewrite_frontier(self, rows: DataFrame, meta: dict, queued_delta: int = 0) -> int:
+        """Replace the frontier with ``rows`` (its resolved state, rewritten)
+        at the current round, carrying the queued count forward plus
+        ``queued_delta``. A rewrite is read-state-then-replace with no
+        compare-and-swap: run it between rounds, on the driver thread."""
+        q = self._queued_after(queued_delta)
+        if q is not None:
+            meta = {**meta, "queued_after": q}
+        return self.frontier.overwrite(rows, self.landing_round(), meta)
+
     # -- seen -----------------------------------------------------------------
 
     def seen_state(self, snapshot_id: int | None = None) -> DataFrame | None:
@@ -504,24 +553,30 @@ class FrontierStore:
         ``store.corpus._current_id()`` after each consumption cycle."""
         return self.corpus.added_since(since_id, to_id)
 
-    # -- single-job round commit ------------------------------------------------
+    # -- tee commit ---------------------------------------------------------------
 
     def shared_write_dir(self) -> str:
-        """Fresh directory for a round's tee write (all tables, one job)."""
-        d = f"{self.root}/shared/{uuid.uuid4().hex}"
-        return d
+        """Fresh directory for a tee write (every table's rows, one write)."""
+        return f"{self.root}/shared/{uuid.uuid4().hex}"
 
     def commit_round(
         self,
         shared_dir: str,
         table_rows: dict[str, int],
-        round_no: int,
+        round_no: int | None = None,
         meta: dict | None = None,
         metrics_rows: list[tuple] | None = None,
         corpus_dir: str | None = None,
         corpus_schema: StructType | None = None,
-    ) -> int:
-        """Commit one round's tee write into every table's snapshot chain.
+        queued_delta: int = 0,
+        queued_before: int | None = None,
+    ) -> int | None:
+        """Commit a tee write into every table's snapshot chain, following
+        the frontier commit protocol (class docstring): ``round_no`` is a
+        round's own round (None for an ingest), ``queued_delta`` the
+        commit's change to the queued row count and ``queued_before`` the
+        fallback base on a store written before hints existed. Returns the
+        ``queued_after`` written (None when there was no base).
 
         Input: the already-written ``shared_dir`` (partitioned by _table,
         laid out as ``TEE_SCHEMA``) plus per-table row counts from the
@@ -535,6 +590,10 @@ class FrontierStore:
         files as their OWN staging dir (the text never rides the tee); the
         corpus commit references it, with its schema.
         """
+        round_no = self.landing_round(round_no)
+        queued_after = self._queued_after(queued_delta, queued_before)
+        if queued_after is not None:
+            meta = {**(meta or {}), "queued_after": queued_after}
         for name, table in (("seen", self.seen), ("results", self.results),
                             ("fetch_log", self.fetch_log)):
             if table_rows.get(name):
@@ -555,7 +614,7 @@ class FrontierStore:
                            ("value", pa.int64())]),
                 round_no,
             )
-        sid = self.frontier.commit_external(
+        self.frontier.commit_external(
             f"{shared_dir}/_table=frontier", table_rows.get("frontier", 0),
             TEE_SCHEMA, round_no, meta,
         )
@@ -571,23 +630,19 @@ class FrontierStore:
         self._maybe_compact(self.fetch_log, self.fetch_log_state, round_no)
         self._maybe_compact(self.metrics, self.metrics_state, round_no)
         self._maybe_compact(self.corpus, self.corpus_state, round_no)
-        return sid
+        return queued_after
 
     # -- maintenance --------------------------------------------------------------
 
     def _maybe_compact(self, store: SnapshotStore, resolver, round_no: int) -> None:
         if store.n_delta_files() >= self.COMPACT_EVERY:
             resolved = resolver()
-            if resolved is not None:
-                meta: dict = {"compaction": True}
-                if store is self.frontier:
-                    # carry the running queued count across the rewrite so
-                    # resume stays zero-job (see queued_after_hint)
-                    prev = store.manifest()
-                    q = (prev or {}).get("meta", {}).get("queued_after")
-                    if q is not None:
-                        meta["queued_after"] = q
-                store.overwrite(resolved, round_no, meta)
+            if resolved is None:
+                return
+            if store is self.frontier:
+                self.rewrite_frontier(resolved, {"compaction": True})
+            else:
+                store.overwrite(resolved, round_no, {"compaction": True})
 
     def last_committed_round(self) -> int | None:
         m = self.frontier.manifest()
@@ -595,10 +650,9 @@ class FrontierStore:
 
     def queued_after_hint(self) -> int | None:
         """Running queued-row count carried in the frontier manifest meta
-        (written by seed/ingest/round commits, carried forward across
-        compactions): lets resume start WITHOUT a full state-resolve count
-        job. None on stores written before this field existed — callers
-        fall back to the count job."""
+        (the frontier commit protocol, class docstring): lets resume start
+        WITHOUT a full state-resolve count job. None on stores written
+        before this field existed — callers fall back to the count job."""
         m = self.frontier.manifest()
         if m is None:
             return None

@@ -203,7 +203,6 @@ def stream_url_ingest(
     input_dir: str,
     checkpoint: str,
     cfg=None,
-    round_no: int | None = None,
     max_files: int = 8,
 ):
     """Continuous URL ingest — the reference's Kafka url-consume loop
@@ -240,10 +239,7 @@ def stream_url_ingest(
     )
 
     def _sink(batch_df, batch_id):  # noqa: ANN001
-        # round_no=None resolves to the store's CURRENT round at batch
-        # time (crawl rounds advance while the stream runs) — committing
-        # behind the frontier would make resume discard later snapshots
-        ingest_urls(spark, store, batch_df, cfg, round_no=round_no)
+        ingest_urls(spark, store, batch_df, cfg)
 
     return (
         urls.writeStream.foreachBatch(_sink)

@@ -8,8 +8,11 @@ Cluster deployment (north_rule):
         --conf spark.sql.adaptive.enabled=true \\
         --conf spark.sql.adaptive.skewJoin.enabled=true \\
         run_crawl.py --pages s3://bucket/pages --seeds s3://bucket/seeds \\
-        --robots s3://bucket/robots --store s3://bucket/crawl_state \\
+        --robots s3://bucket/robots --store /mnt/shared/crawl_state \\
         --n-buckets 4096 --round-wall 60
+
+The state store commits with ``os.rename``, so ``--store`` is a local or
+shared-mount POSIX path; a URI (``s3://...``) is rejected.
 
 At-scale corpus layout (one-time, then crawl against the table — big
 slices join bucket-in-place, tiny slices point-lookup via pushed In +
@@ -23,13 +26,14 @@ Local smoke:
 
     python run_crawl.py --synthetic 1000 --store /tmp/crawl_state
 
-Resume a killed run by re-invoking with the same --store (and --resume).
+Re-invoking with the same --store resumes a killed run.
 """
 
 from __future__ import annotations
 
 import argparse
 import json
+import re
 import sys
 
 
@@ -49,12 +53,10 @@ def main() -> int:
                          "bucket ~ a few GB at the target corpus)")
     ap.add_argument("--seeds", help="parquet path of seeds (url, priority, seq)")
     ap.add_argument("--robots", help="parquet path of robots rules")
-    ap.add_argument("--store", required=True, help="state-store root")
+    ap.add_argument("--store", required=True,
+                    help="state-store root: a local or shared-mount path")
     ap.add_argument("--synthetic", type=int, default=0,
                     help="generate an N-page synthetic site instead of --pages")
-    ap.add_argument("--resume", action="store_true",
-                    help="resume from the last committed round (default when "
-                         "the store is already seeded)")
     ap.add_argument("--max-rounds", type=int, default=1000)
     ap.add_argument("--round-wall", type=float, default=60.0)
     ap.add_argument("--per-host-cap", type=int, default=30)
@@ -74,6 +76,9 @@ def main() -> int:
                                    "use as the pages corpus (Common Crawl "
                                    "layout) instead of --pages")
     args = ap.parse_args()
+    if re.match(r"[A-Za-z][A-Za-z0-9+.-]*://", args.store):
+        ap.error(f"--store {args.store}: the state store commits with "
+                 "os.rename and needs a local or shared-mount path, not a URI")
 
     import os
 

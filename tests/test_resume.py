@@ -98,9 +98,9 @@ def test_mid_crawl_ingest_preserves_round_chain(spark, tmp_path):
     the store's CURRENT round — not round 0 — or the next resume rolls every
     sibling table back to 0, discarding later rounds' snapshots and leaving
     re-queued rows stuck 'queued' (their marks' op_seq loses to the higher
-    insert op_seqs of later rounds)."""
-    import pytest
-
+    insert op_seqs of later rounds). Re-seeding is an ingest too: a second
+    init adds only unseen URLs at the current round, and re-seeding known
+    URLs commits nothing."""
     from crawlspark.crawl import ingest_urls
     from crawlspark.schema import SEEDS
 
@@ -117,9 +117,10 @@ def test_mid_crawl_ingest_preserves_round_chain(spark, tmp_path):
         r["rank"]: r["url"] for r in runner.store.results_state().collect()
     }
     seen_before = runner.seen_urls()
+    fetched_before = runner.fetch_sequence()
     assert results_before and seen_before
 
-    # mid-crawl ingest of a NOT-yet-seen URL, default round_no
+    # mid-crawl ingest of a NOT-yet-seen URL
     host = site["pages"][0]["url"].split("/")[2]
     new_url = f"https://{host}/brand-new-page"  # canonical form == itself
     out = ingest_urls(
@@ -130,26 +131,34 @@ def test_mid_crawl_ingest_preserves_round_chain(spark, tmp_path):
     # the ingest commit must NOT regress the frontier's round
     assert runner.store.last_committed_round() == last
 
-    # explicit backwards round_no is refused loudly
-    with pytest.raises(ValueError, match="last committed round"):
-        ingest_urls(
-            spark, runner.store,
-            spark.createDataFrame([("http://x.test/a", 1, 1)], schema=SEEDS),
-            CFG, round_no=0,
-        )
+    # re-init with one new URL: an ingest at the current round
+    seeded_url = f"https://{host}/re-seeded-page"
+    runner.init(spark.createDataFrame([(seeded_url, 1, 10**9 + 1)], schema=SEEDS))
+    assert runner.store.last_committed_round() == last
+    # re-init with the original seeds: every URL is known, nothing commits
+    tables = (runner.store.frontier, runner.store.seen, runner.store.results,
+              runner.store.fetch_log, runner.store.metrics, runner.store.corpus)
+    heads = [t._current_id() for t in tables]
+    runner.init(seeds)
+    assert [t._current_id() for t in tables] == heads
+    assert runner.store.last_committed_round() == last
+    assert runner.store.queued_after_hint() == runner.queued_count() == 2
+    seen = runner.store.seen_state()
+    assert seen.count() == seen.select("fp").distinct().count()
 
     # fresh handle = resume: nothing may be rolled back or re-crawled
     resumed = CrawlRunner(spark, root, CFG)
     assert resumed.resume_round() == last + 1
-    assert resumed.seen_urls() == seen_before | {new_url}
+    assert resumed.seen_urls() == seen_before | {new_url, seeded_url}
+    assert resumed.fetch_sequence() == fetched_before
     assert {
         r["rank"]: r["url"] for r in resumed.store.results_state().collect()
     } == results_before
-    # continuing the crawl pops ONLY the ingested URL (a dead link here ->
-    # it retries then exhausts); nothing previously done is re-crawled
+    # continuing the crawl pops ONLY the two added URLs (dead links here ->
+    # they retry then exhaust); nothing previously done is re-crawled
     res = resumed.run(pages, robots)
     assert res.total_fetched == 0  # not in the corpus -> miss
-    assert sum(c.get("popped", 0) for c in res.counts) <= CFG.max_retries
+    assert sum(c.get("popped", 0) for c in res.counts) <= 2 * CFG.max_retries
     assert {
         r["rank"]: r["url"] for r in resumed.store.results_state().collect()
     } == results_before

@@ -10,6 +10,7 @@ import json
 import os
 import shutil
 import subprocess
+import sys
 import zipfile
 
 import pytest
@@ -48,3 +49,17 @@ def test_spark_submit_py_files_end_to_end(tmp_path):
     res = json.loads(line)
     assert res["fetched"] > 100
     assert all(r.get("denied", 0) >= 0 for r in res["per_round"])
+
+
+def test_store_uri_rejected_before_spark_starts(tmp_path):
+    """The state store commits with os.rename: a ``--store`` URI must be
+    refused up front, not turned into a local ``./s3:/...`` tree while
+    Spark sends the tee data to the URI."""
+    out = subprocess.run(
+        [sys.executable, os.path.join(REPO, "run_crawl.py"),
+         "--synthetic", "10", "--store", "s3://bucket/crawl_state"],
+        capture_output=True, text=True, timeout=120, cwd=str(tmp_path),
+    )
+    assert out.returncode == 2, out.stderr[-2000:]
+    assert "--store" in out.stderr
+    assert not (tmp_path / "s3:").exists()
